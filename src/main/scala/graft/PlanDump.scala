@@ -4,11 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-evidence dumper for the optimization rounds: writes the
   * `.explain("formatted")` output of each named registry query's FINAL
-  * frame to `<outDir>/<query>_<suffix>.txt`, prefixed with the total
+  * frame — taken after execution, so it is the final adaptive plan,
+  * not the initial one — to `<outDir>/<query>_<suffix>.txt`, prefixed
+  * with the total
   * Spark job count observed while BUILDING and EXECUTING the query
   * (the number that captures eager commit/maintenance work the final
-  * frame's plan cannot show). Session shape mirrors graft.Bench so the
-  * dumped plans are the plans the bench actually runs.
+  * frame's plan cannot show). Session shape and CPU default mirror
+  * graft.Bench so the dumped plans are the plans the bench actually
+  * runs; the cache is cleared between queries, as Bench does.
   *
   * Usage: tools/run.sh graft.PlanDump <outDir> <suffix> <query>...
   */
@@ -20,7 +23,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -50,12 +53,13 @@ object PlanDump {
       val t0 = System.nanoTime()
       spark.sparkContext.setJobDescription(s"plandump: $name")
       val df = SparkEntry.queries(name)(spark, sfDir)
+      df.queryExecution.toRdd.count()
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      df.queryExecution.toRdd.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are async; give the bus a beat to drain
-      Thread.sleep(300)
+      spark.catalog.clearCache()
+      // listener events are async: drain the bus before reading the count
+      org.apache.spark.graftbridge.BusBridge.drain(spark.sparkContext)
       val jobs = jobCount.get() - before
       val body =
         s"# $name ($suffix)\n" +

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, mi
   * {{{
   *   <dir>/v1/ ... v2/ ...   immutable parquet snapshot directories
   *   <dir>/v2/_stats.tsv     optional per-file column min/max sidecar
-  *   <dir>/v2/_bloom.tsv     optional per-file column bloom sidecar
+  *   <dir>/v2/_manifest/     the same stats as a parquet table
+  *   <dir>/v2/_bloomtab/     optional per-file column bloom table
   *   <dir>/v3/_base          merge-on-read DELETE commit: no data files,
   *   <dir>/v3/_deletes/      a base-version pointer plus tombstone keys
   *   <dir>/current           pointer file, contents "v<N>"
@@ -63,10 +64,13 @@ import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, mi
   *  - '''File skipping''': [[commit]] with `statsCols` writes a
   *    per-file column min/max/nullCount sidecar (`_stats.tsv`,
   *    underscore-prefixed so data readers never see it — the Delta
-  *    add-file-stats / Iceberg manifest-metrics pattern), and
-  *    [[readWhere]] prunes files whose [min,max] cannot satisfy a
-  *    range predicate BEFORE the scan: the biggest single scan win an
-  *    unpartitioned predicate read gets at 100 TB.
+  *    add-file-stats / Iceberg manifest-metrics pattern), and with
+  *    `bloomCols` a per-file bloom table (`_bloomtab/`).
+  *    `readAt(…, where)` prunes every generation's files BEFORE the
+  *    scan through [[pruneFiles]] — range and null terms decided on
+  *    the driver from the stats, IN terms by a distributed bloom
+  *    probe — and applies the row filter on top: the biggest single
+  *    scan win an unpartitioned predicate read gets at 100 TB.
   *
   * Writer concurrency: the pointer flip itself is serialized through a
   * short-lived `.commit.lock` file (atomic create; held only across the
@@ -156,7 +160,7 @@ object SnapshotTable {
     *
     * `statsCols` (optional) gathers per-file min/max/nullCount for the
     * named DATA columns into the version's `_stats.tsv` sidecar — the
-    * file-skipping manifest [[readWhere]] prunes with. The stats scan
+    * file-skipping manifest [[pruneFiles]] decides with. The stats scan
     * reads only the named columns of the freshly staged files (column-
     * pruned parquet footers+pages, one extra pass over what was just
     * written — the same bookkeeping cost every stats-writing format
@@ -786,12 +790,12 @@ object SnapshotTable {
     * generation by that generation's own directories
     * (`snapshot_partition_evolve` pins it). Likewise `statsCols` /
     * `bloomCols` sidecar only the delta's files; the base keeps its
-    * own sidecars, so skipping composes per generation. Note the
-    * skipping READS ([[readWhere]]/[[readWhereIn]]/[[manifest]])
-    * target single-generation versions and refuse an append version
-    * loudly — prune each generation against its own manifest, then
-    * union (what the gate does); a silent cross-generation answer
-    * from one generation's sidecar would be wrong.
+    * own sidecars, so skipping composes per generation: a pruned
+    * [[readAt]] decides each generation's files against that
+    * generation's own sidecars, then unions. [[manifest]] covers one
+    * generation and refuses an append version loudly (use
+    * [[manifestChain]]); a silent cross-generation answer from one
+    * generation's sidecar would be wrong.
     *
     * The delta must carry exactly the base read's column set (checked
     * loudly). Hive-partition type round-trip is the caller's care as
@@ -1179,8 +1183,30 @@ object SnapshotTable {
     * practice because any full-rewrite commit (compaction) cuts them.
     * A filter over the chain read pushes into EVERY generation's scan
     * branch, so partition pruning applies per generation's own layout.
+    *
+    * `where` (a conjunction, empty by default) makes the read a PRUNED
+    * one: each generation's scan opens only its [[pruneFiles]]
+    * survivors (with `basePath`, so hive-partition columns still
+    * resolve; an empty frame when nothing survives), and the row
+    * filter for every term applies once on top — an IN term over
+    * [[InlineInLiteralMax]] keys as a broadcast semi-join. Tombstones
+    * are read in full and pruning only drops files without a matching
+    * row, so the answer equals `readAt(version).filter(where)` on any
+    * append, upsert or delete chain: pure I/O savings in every
+    * generation. With `where` empty no sidecar is read and the plan is
+    * the plain chain read.
     */
-  def readAt(spark: SparkSession, dir: String, version: Long): DataFrame = {
+  def readAt(spark: SparkSession, dir: String, version: Long,
+      where: Seq[PrunePredicate] = Nil): DataFrame = {
+    val chain = readChain(spark, dir, version, where)
+    if (where.isEmpty) chain else residual(chain, where)
+  }
+
+  /** The [[readAt]] chain walk, each generation's own files pruned by
+    * `where` (no row filter yet).
+    */
+  private def readChain(spark: SparkSession, dir: String, version: Long,
+      where: Seq[PrunePredicate]): DataFrame = {
     // visibility gate, not just existence: on the rename-less profile a
     // dead writer's half-copied v<N> directory is PRESENT on the store
     // — reading it would silently return partial data. One metadata
@@ -1190,15 +1216,15 @@ object SnapshotTable {
     baseOf(dir, version) match {
       case Some(b) =>
         val dels = spark.read.parquet(s"$dir/v$version/_deletes")
-        readAt(spark, dir, b).join(dels, dels.columns.toSeq, "left_anti")
+        readChain(spark, dir, b, where).join(dels, dels.columns.toSeq, "left_anti")
       case None => appendBaseOf(dir, version) match {
-        case None => spark.read.parquet(s"$dir/v$version")
+        case None => ownFiles(spark, dir, version, where)
         case Some(b) =>
           // an UPSERT generation carries tombstones against its base:
           // anti-join them BEFORE this generation's own files union in,
           // so the batch replaces (never deletes) itself — the
           // single-commit MERGE read shape
-          val base0 = readAt(spark, dir, b)
+          val base0 = readChain(spark, dir, b, where)
           val base =
             if (isUpsert(dir, version)) {
               val dels = spark.read.parquet(s"$dir/v$version/_deletes")
@@ -1209,9 +1235,25 @@ object SnapshotTable {
           // vice versa) — commit-time checks already guarded against
           // ACCIDENTAL drift, so by read time a difference is a
           // deliberate evolution
-          base.unionByName(spark.read.parquet(s"$dir/v$version"),
+          base.unionByName(ownFiles(spark, dir, version, where),
             allowMissingColumns = true)
       }
+    }
+  }
+
+  /** One generation's own data files: the whole version directory when
+    * `where` is empty, else only its [[pruneFiles]] survivors.
+    */
+  private def ownFiles(spark: SparkSession, dir: String, version: Long,
+      where: Seq[PrunePredicate]): DataFrame = {
+    val vdir = s"$dir/v$version"
+    if (where.isEmpty) spark.read.parquet(vdir)
+    else {
+      val (files, _) = pruneFiles(spark, dir, version, where)
+      if (files.nonEmpty) spark.read.option("basePath", vdir).parquet(files: _*)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.read.parquet(vdir).schema)
     }
   }
 
@@ -1257,8 +1299,8 @@ object SnapshotTable {
   // ------------------------------------------- per-file stats / skipping
 
   /** One (file, column) stats line from a version's `_stats.tsv`:
-    * everything [[readWhere]] needs to decide whether a file can
-    * contain a row matching a range predicate. `min`/`max` are None
+    * everything [[pruneFiles]] needs to decide whether a file can
+    * contain a row matching a range or null term. `min`/`max` are None
     * for an all-null file. Values are kept in their exact string form
     * and compared under `typ` ("long" | "double" | "decimal" |
     * "string"; dates ride as ISO strings, whose lexicographic order is
@@ -1328,9 +1370,8 @@ object SnapshotTable {
     // the same stats AS A TABLE (`_manifest/`, parquet, covered by the
     // atomic claim-rename like everything else in the staging dir): the
     // metadata tree every real format keeps queryable (Iceberg's
-    // table.files, Delta's log). At 10^5 files a pruning decision is a
-    // DataFrame filter over this, not a driver readAllLines loop; the
-    // TSV stays as the human-readable compatibility sidecar. The rows
+    // table.files, Delta's log) for metadata-only answering; the TSV
+    // is what the driver-side file-skipping decision parses. The rows
     // are already ON the driver (file-count-bounded), so the tiny
     // parquet is written directly — a Spark job per commit just to
     // persist a handful of metadata rows was pure scheduler overhead.
@@ -1649,18 +1690,22 @@ object SnapshotTable {
   }
 
   /** Build per-file bloom filters for `bloomCols` over the staged write
-    * and persist them as `_bloom.tsv` (file TAB column TAB base64 bits,
-    * covered by the same atomic claim-rename as the data). One grouped
-    * aggregation keyed by `input_file_name()` with a typed Aggregator
-    * whose buffer is Spark's own mergeable
+    * and persist them as the `_bloomtab/` parquet table (file, column,
+    * bits; covered by the same atomic claim-rename as the data). One
+    * grouped aggregation keyed by `input_file_name()` with a typed
+    * Aggregator whose buffer is Spark's own mergeable
     * [[org.apache.spark.util.sketch.BloomFilter]] — map-side partials
     * OR together, so the pass is one column-pruned scan of the fresh
     * files and the collect is one row per (file, column): the same
-    * driver-bounded manifest scale as `_stats.tsv`.
+    * driver-bounded manifest scale as `_stats.tsv`. A table, not a
+    * driver-parsed text file: at 10^5 files × ~150 KB of bits each,
+    * the probe must DISTRIBUTE (each task deserializes its rows'
+    * filters, tests the keys, emits survivors only), which
+    * [[pruneFiles]] does.
     *
     * Null handling matches the stats sidecar's spirit: nulls are NOT
-    * inserted, and the point-lookup reader ([[pruneFilesBloom]]) prunes
-    * on equality semantics where NULL never matches.
+    * inserted, and an IN term prunes on equality semantics where NULL
+    * never matches.
     */
   private def writeBloomSidecar(spark: SparkSession,
       staged: java.nio.file.Path, bloomCols: Seq[String],
@@ -1701,30 +1746,9 @@ object SnapshotTable {
       .agg(aggs.head, aggs.tail: _*)
       .collect()
     val marker = staged.getFileName.toString + "/"
-    val enc = (s: String) =>
-      java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
-    val b64 = java.util.Base64.getEncoder
-    val lines = rows.flatMap { r =>
-      val full = r.getString(r.fieldIndex("_f"))
-      val i = full.indexOf(marker)
-      require(i >= 0, s"bloom scan returned a file outside the staging dir: $full")
-      val rel = full.substring(i + marker.length)
-      bloomCols.map { c =>
-        val bits = r.getAs[Array[Byte]](r.fieldIndex(s"bf_$c"))
-        Seq(enc(rel), enc(c), b64.encodeToString(bits)).mkString("\t")
-      }
-    }
-    java.nio.file.Files.writeString(staged.resolve("_bloom.tsv"),
-      lines.sorted.mkString("", "\n", "\n"))
-    // the same filters AS A TABLE (`_bloomtab/`, parquet, covered by
-    // the atomic claim-rename): at 10^5 files × ~150 KB of bits each,
-    // a driver-side TSV parse of every filter is gigabytes of heap —
-    // the probe must DISTRIBUTE (each task deserializes its rows'
-    // filters, tests the keys, emits survivors only), which
-    // [[pruneFilesBloom]]'s spark overload does. The TSV stays as the
-    // human-readable compatibility sidecar. The rows are already ON
-    // the driver, so the tiny parquet is written directly (same
-    // no-Spark-job reasoning as the `_manifest` write).
+    // the rows are already ON the driver, so the tiny parquet is
+    // written directly (same no-Spark-job reasoning as the `_manifest`
+    // write)
     val btSchema = {
       import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -1738,7 +1762,9 @@ object SnapshotTable {
       staged.resolve("_bloomtab"), btSchema) { (factory, write) =>
       rows.foreach { r =>
         val full = r.getString(r.fieldIndex("_f"))
-        val rel = full.substring(full.indexOf(marker) + marker.length)
+        val i = full.indexOf(marker)
+        require(i >= 0, s"bloom scan returned a file outside the staging dir: $full")
+        val rel = full.substring(i + marker.length)
         bloomCols.foreach { c =>
           val g = factory.newGroup()
           g.add("file", rel)
@@ -1748,28 +1774,6 @@ object SnapshotTable {
           write(g)
         }
       }
-    }
-  }
-
-  /** Parse a version's `_bloom.tsv` into (file, column, filter) rows
-    * (empty when the commit didn't ask for blooms).
-    */
-  def readBloom(dir: String, version: Long):
-      Seq[(String, String, org.apache.spark.util.sketch.BloomFilter)] = {
-    val p = java.nio.file.Paths.get(dir, s"v$version", "_bloom.tsv")
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else {
-      val dec = (s: String) =>
-        java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-      val b64 = java.util.Base64.getDecoder
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String])
-        .toSeq.filter(_.nonEmpty).map { line =>
-          val f = line.split("\t", -1)
-          require(f.length == 3, s"corrupt _bloom.tsv line in $p: '$line'")
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(b64.decode(f(2))))
-          (dec(f(0)), dec(f(1)), bf)
-        }
     }
   }
 
@@ -1786,9 +1790,8 @@ object SnapshotTable {
     * Since r18 the manifest is itself a parquet TABLE committed inside
     * the version directory (`_manifest/`, written by the same staging
     * pass as `_stats.tsv` and covered by the same atomic rename), so a
-    * 10⁵-file version's manifest is a distributed scan and a pruning
-    * decision is a DataFrame filter — no driver loop anywhere on the
-    * metadata path. Versions committed before the table existed fall
+    * 10⁵-file version's manifest is a distributed scan — no driver
+    * loop on the metadata-answering path. Versions committed before the table existed fall
     * back to parsing the TSV into a local relation (same schema).
     * Loud error on a stats-less version (a caller answering from
     * metadata must know when there is none), on a merge-on-read delete
@@ -1848,7 +1851,7 @@ object SnapshotTable {
         // the whole chain answers from TWO scans — this version's fold
         // + this version's own manifest — however many generations deep
         // the ingest ran. A 10³-commit streaming table would otherwise
-        // pay 10³ recursive reads per pruning decision. Generations
+        // pay 10³ recursive reads per metadata answer. Generations
         // without a fold (pre-fold commits, stats-less ancestors) fall
         // back to the recursive walk.
         val folded = foldPath(dir, version)
@@ -2152,197 +2155,38 @@ object SnapshotTable {
     }
   }
 
-  /** File-skipping decision for `column IN (keys)` on a bloom-carrying
-    * version: a file survives iff its filter says ANY key might be
-    * present. This is the point-lookup complement to [[pruneFiles]] —
-    * min/max ranges are powerless when a high-cardinality key is
-    * scattered across every file (each file's [min,max] spans the whole
-    * keyspace), but a bloom answers "definitely not here" per file, so
-    * a needle query on an unpartitioned, unclustered 100 TB table opens
-    * ~the files that actually hold the needles (plus the disclosed 1%
-    * false-positive tail). No false negatives: correctness never
-    * depends on the filter, only I/O does. Keys are canonicalized
-    * through the same string form the build side inserted. Absent or
-    * column-less blooms are a LOUD error, same contract as
-    * [[pruneFiles]].
-    */
-  def pruneFilesBloom(dir: String, version: Long, column: String,
-      keys: Seq[Any]): (Seq[String], Int) = {
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFilesBloom targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFilesBloom covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar")
-    require(keys.nonEmpty, "pruneFilesBloom needs at least one key")
-    val blooms = readBloom(dir, version).filter(_._2 == column)
-    require(blooms.nonEmpty,
-      s"no per-file bloom for column '$column' on $dir v$version — " +
-        "commit with bloomCols to enable point-lookup file skipping")
-    val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k)))
-    val kept = blooms.collect {
-      case (file, _, bf) if keyBytes.exists(bf.mightContainBinary) => file
-    }
-    (kept.map(f => s"$dir/v$version/$f"), blooms.size)
-  }
+  // ------------------------------------------ predicate file skipping
 
-  /** The DISTRIBUTED bloom probe — same decision as the driver-side
-    * overload, computed as a scan of the committed `_bloomtab` parquet
-    * table: each task deserializes only its rows' filters and tests
-    * the keys, so at 10⁵ files × ~150 KB of bits the probe never
-    * materializes gigabytes of filters on the driver (the collect is
-    * SURVIVORS-ONLY, the same driver-bounded file list every planner
-    * holds). Falls back to the TSV sidecar for versions committed
-    * before the table existed. [[readWhereIn]]/[[readWhereMulti]]
-    * route through this.
+  /** One term of a conjunctive predicate: [[pruneFiles]] decides it per
+    * file against the sidecar its kind names, and [[readAt]] applies it
+    * per row on top. Real predicates are ANDs over several columns; a
+    * single-column prune leaves the other terms' skipping power on the
+    * table.
     */
-  def pruneFilesBloom(spark: SparkSession, dir: String, version: Long,
-      column: String, keys: Seq[Any]): (Seq[String], Int) = {
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFilesBloom targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFilesBloom covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar " +
-        "(pruneFilesBloomOwn / readWhereInChain)")
-    require(keys.nonEmpty, "pruneFilesBloom needs at least one key")
-    pruneBloomUnguarded(spark, dir, version, column, keys)
-  }
+  sealed trait PrunePredicate { def column: String }
 
-  /** The shared probe core, chain guards already applied by callers:
-    * distributed over the committed `_bloomtab` when present, the
-    * driver-side TSV parse for versions that predate it.
+  /** `column BETWEEN lo AND hi` — decided against the stats sidecar
+    * (per-file min/max overlap).
     */
-  private def pruneBloomUnguarded(spark: SparkSession, dir: String,
-      version: Long, column: String, keys: Seq[Any]): (Seq[String], Int) = {
-    val bt = java.nio.file.Paths.get(dir, s"v$version", "_bloomtab")
-    if (!java.nio.file.Files.exists(bt)) {
-      val blooms = readBloom(dir, version).filter(_._2 == column)
-      require(blooms.nonEmpty,
-        s"no per-file bloom for column '$column' on $dir v$version — " +
-          "commit with bloomCols to enable point-lookup file skipping")
-      val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k)))
-      val kept = blooms.collect {
-        case (file, _, bf) if keyBytes.exists(bf.mightContainBinary) => file
-      }
-      return (kept.map(f => s"$dir/v$version/$f"), blooms.size)
-    }
-    import spark.implicits._
-    val tab = spark.read.parquet(bt.toString)
-      .filter(col("column") === column)
-      .select(col("file"), col("bits")).as[(String, Array[Byte])]
-    val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k))).toArray
-    val decided = tab.mapPartitions { it =>
-      it.map { case (file, bits) =>
-        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bits))
-        (file, keyBytes.exists(bf.mightContainBinary))
-      }
-    }
-    // one pass decides; total and survivors come back together (the
-    // frame is file-count-bounded metadata, and the survivors subset
-    // is what the planner needs on the driver anyway)
-    val rows = decided.collect()
-    require(rows.nonEmpty,
-      s"no per-file bloom for column '$column' on $dir v$version — " +
-        "commit with bloomCols to enable point-lookup file skipping")
-    val kept = rows.collect { case (f, true) => f }.toSeq.sorted
-    (kept.map(f => s"$dir/v$version/$f"), rows.length)
-  }
+  final case class RangePredicate(column: String, lo: Any, hi: Any)
+      extends PrunePredicate
 
-  /** ONE GENERATION's own-file skipping decision for `column IN
-    * (keys)` — the per-generation building block a chain read composes
-    * ([[pruneFilesBloom]] refuses append versions precisely because
-    * its answer covers one generation's files and silently presenting
-    * it as the chain answer would be wrong; this is that
-    * one-generation answer made EXPLICIT). A delete commit carries no
-    * data files and is refused loudly. Returns (surviving own file
-    * paths, own file total).
+  /** `column IN (keys)` — decided against the per-file bloom table (a
+    * file survives iff any key might be present).
     */
-  def pruneFilesBloomOwn(spark: SparkSession, dir: String, version: Long,
-      column: String, keys: Seq[Any]): (Seq[String], Int) = {
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFilesBloomOwn: v$version of $dir is a merge-on-read delete " +
-        "commit with no data files of its own")
-    require(keys.nonEmpty, "pruneFilesBloomOwn needs at least one key")
-    pruneBloomUnguarded(spark, dir, version, column, keys)
-  }
+  final case class InPredicate(column: String, keys: Seq[Any])
+      extends PrunePredicate
 
-  /** Bloom-pruned point-lookup read over an APPEND CHAIN: each
-    * generation's own files prune against that generation's own bloom
-    * sidecar, the surviving scans union BY NAME (per-generation
-    * layouts and schemas stay free, the spec-evolution discipline),
-    * and the row-level IN filter applies on top — byte-identical to
-    * the full chain scan, pure I/O savings in EVERY generation. This
-    * is the needle read for a table that took a year of ingest
-    * batches: the chain's depth costs nothing but one sidecar decision
-    * per generation. Tombstone-carrying chains (delete or upsert
-    * commits) are refused loudly — an anti-join under per-generation
-    * pruning could only be answered correctly by also scanning the
-    * tombstones, which [[readAt]] already does; compact first.
+  /** `column IS NULL` / `IS NOT NULL` — decided against the stats
+    * sidecar's per-file null counts: a file with zero nulls cannot
+    * satisfy IS NULL, an all-null file cannot satisfy IS NOT NULL.
+    * The null-count side of the Delta/Iceberg stats record, which
+    * range and bloom terms can't use (neither sidecar sees nulls).
     */
-  def readWhereInChain(spark: SparkSession, dir: String, version: Long,
-      column: String, keys: Seq[Any]): DataFrame = {
-    val gens = chainOf(dir, version)
-    gens.foreach { g =>
-      require(baseOf(dir, g).isEmpty && !isUpsert(dir, g),
-        s"readWhereInChain: v$g of $dir carries tombstones — their " +
-          "anti-join defeats per-generation pruning; compact first or " +
-          "use readAt")
-    }
-    gens.map { g =>
-      val (files, _) = pruneFilesBloomOwn(spark, dir, g, column, keys)
-      val vdir = s"$dir/v$g"
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(vdir).schema)
-      else spark.read.option("basePath", vdir).parquet(files: _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-      .filter(col(column).isin(keys: _*))
-  }
+  final case class NullPredicate(column: String, isNull: Boolean)
+      extends PrunePredicate
 
-  /** Bloom-pruned point-lookup read: `readAt(version).filter(column IN
-    * keys)` that opens ONLY the files whose bloom admits at least one
-    * key. The row-level IN filter still applies (a bloom keeps false
-    * positives), so the answer is byte-identical to the full scan —
-    * pure I/O savings, like [[readWhere]].
-    *
-    * Merge-on-read delete commits resolve like [[readAt]]: the pruning
-    * happens on the underlying DATA version's sidecar (a bloom cannot
-    * forget a key, so a deleted key only costs a false-positive file
-    * open) and every `_deletes` level in the chain anti-joins on top —
-    * a point lookup can never resurrect an erased key through the
-    * skipping path.
-    */
-  def readWhereIn(spark: SparkSession, dir: String, version: Long,
-      column: String, keys: Seq[Any]): DataFrame =
-    prunedInScan(spark, dir, version, column, keys)
-      .filter(col(column).isin(keys: _*))
-
-  /** The bloom-pruned chain scan WITHOUT the residual row filter —
-    * shared by [[readWhereIn]] (which adds an IN literal, parquet-
-    * pushable for bounded key lists) and [[readWhereInFrom]]'s
-    * large-key path (which adds a broadcast semi-join instead, because
-    * a Catalyst IN over tens of thousands of literals bloats the
-    * expression tree and codegen).
-    */
-  private def prunedInScan(spark: SparkSession, dir: String, version: Long,
-      column: String, keys: Seq[Any]): DataFrame = baseOf(dir, version) match {
-    case Some(b) =>
-      val dels = spark.read.parquet(s"$dir/v$version/_deletes")
-      prunedInScan(spark, dir, b, column, keys)
-        .join(dels, dels.columns.toSeq, "left_anti")
-    case None =>
-      val (files, _) = pruneFilesBloom(spark, dir, version, column, keys)
-      val vdir = s"$dir/v$version"
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(vdir).schema)
-      else spark.read.option("basePath", vdir).parquet(files: _*)
-  }
-
-  /** Past this many keys the residual filter becomes a broadcast
+  /** Past this many keys an IN term's residual becomes a broadcast
     * semi-join on a local relation instead of an IN literal list — an
     * IN with tens of thousands of literals bloats the Catalyst tree
     * and the generated code, while a broadcast hash semi-join costs
@@ -2351,9 +2195,132 @@ object SnapshotTable {
     */
   val InlineInLiteralMax: Int = 1024
 
-  /** DYNAMIC file pruning — [[readWhereIn]] whose key set comes from a
-    * DIMENSION-SIDE frame at runtime instead of from literals: the
-    * semi-join shape every star-schema needle query has (`fact JOIN
+  /** File-skipping decision for a CONJUNCTION over ONE generation's own
+    * data files: returns (surviving file paths, own file total). Range
+    * and null terms are decided on the driver from the stats sidecar
+    * (file-count-bounded, zero Spark jobs); IN terms by the distributed
+    * `_bloomtab` probe — each task deserializes only its rows' filters
+    * and tests the keys, so at 10⁵ files × ~150 KB of bits the driver
+    * never holds the filters, only the survivors. The survivor sets
+    * INTERSECT, so the conjunction prunes at least as hard as its
+    * strongest term (on a 2-D-clustered layout: "one cell", not "one
+    * stripe"). Stats are a superset bound and blooms keep false
+    * positives, so survivors only ever over-approximate the matching
+    * files — [[readAt]] applies the row filter on top.
+    *
+    * A term whose sidecar is missing is a LOUD error, never a silent
+    * full scan: a caller who priced the query on that term's skipping
+    * must know. A sidecar that records no file at all belongs to a
+    * generation with no non-empty data file, and nothing survives. A
+    * merge-on-read delete commit has no data files of its own and is
+    * refused; append and upsert generations answer for their own files
+    * (the base generations carry their own sidecars).
+    */
+  def pruneFiles(spark: SparkSession, dir: String, version: Long,
+      where: Seq[PrunePredicate]): (Seq[String], Int) = {
+    require(where.nonEmpty, "pruneFiles needs at least one predicate")
+    require(baseOf(dir, version).isEmpty,
+      s"pruneFiles: v$version of $dir is a merge-on-read delete commit " +
+        "with no data files of its own — prune its base")
+    lazy val stats = readStats(dir, version)
+    val decided: Seq[(Seq[String], Seq[String])] = where.map {
+      case InPredicate(c, keys) => bloomSurvivors(spark, dir, version, c, keys)
+      case RangePredicate(c, lo, hi) =>
+        val (loS, hiS) = (String.valueOf(lo), String.valueOf(hi))
+        statsSurvivors(dir, version, stats, c) { st =>
+          (st.min, st.max) match {
+            case (Some(mn), Some(mx)) =>
+              cmpStat(st.typ, mn, hiS) <= 0 && cmpStat(st.typ, mx, loS) >= 0
+            case _ => false // all-null file: no row can satisfy a range
+          }
+        }
+      case NullPredicate(c, isNull) =>
+        statsSurvivors(dir, version, stats, c) { st =>
+          if (isNull) st.nulls > 0 else st.nulls < st.rowCount
+        }
+    }
+    val kept = decided.map(_._1.toSet).reduce(_ intersect _)
+    (kept.toSeq.sorted.map(f => s"$dir/v$version/$f"),
+      decided.flatMap(_._2).distinct.size)
+  }
+
+  /** (kept, all) own files of one stats-decided term. */
+  private def statsSurvivors(dir: String, version: Long,
+      stats: Seq[ColStats], column: String)(
+      keep: ColStats => Boolean): (Seq[String], Seq[String]) = {
+    val st = stats.filter(_.col == column)
+    require(st.nonEmpty || (stats.isEmpty && java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, s"v$version", "_stats.tsv"))),
+      s"no per-file stats for column '$column' on $dir v$version — " +
+        "commit with statsCols to enable file skipping")
+    (st.filter(keep).map(_.file), st.map(_.file))
+  }
+
+  /** (kept, all) own files of one IN term, probed over `_bloomtab`. */
+  private def bloomSurvivors(spark: SparkSession, dir: String,
+      version: Long, column: String,
+      keys: Seq[Any]): (Seq[String], Seq[String]) = {
+    val bt = java.nio.file.Paths.get(dir, s"v$version", "_bloomtab")
+    val missing = s"no per-file bloom for column '$column' on $dir " +
+      s"v$version — commit with bloomCols to enable point-lookup file skipping"
+    require(java.nio.file.Files.exists(bt), missing)
+    import spark.implicits._
+    val tab = spark.read.parquet(bt.toString)
+    val keyBytes = keys.map(k => bloomKeyBytes(String.valueOf(k))).toArray
+    // one pass decides; total and survivors come back together (the
+    // frame is file-count-bounded metadata)
+    val rows = tab.filter(col("column") === column)
+      .select(col("file"), col("bits")).as[(String, Array[Byte])]
+      .mapPartitions(_.map { case (file, bits) =>
+        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(bits))
+        (file, keyBytes.exists(bf.mightContainBinary))
+      }).collect()
+    require(rows.nonEmpty || tab.isEmpty, missing)
+    (rows.collect { case (f, true) => f }.toSeq, rows.map(_._1).toSeq)
+  }
+
+  /** The row-level form of one term — what [[readAt]] applies on top of
+    * the pruned scans.
+    */
+  private def rowFilter(p: PrunePredicate): org.apache.spark.sql.Column =
+    p match {
+      case RangePredicate(c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi)
+      case InPredicate(c, keys) => col(c).isin(keys: _*)
+      case NullPredicate(c, isNull) =>
+        if (isNull) col(c).isNull else col(c).isNotNull
+    }
+
+  /** The residual over a pruned chain read: one filter for every term,
+    * except that an IN term over [[InlineInLiteralMax]] keys becomes a
+    * broadcast LEFT SEMI against a local relation of its keys. Null
+    * keys never match under either form — IN and the equi-semi-join
+    * are both null-rejecting — so the answers coincide.
+    */
+  private def residual(df: DataFrame, where: Seq[PrunePredicate]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val big = where.collect {
+      case p @ InPredicate(_, keys) if keys.size > InlineInLiteralMax => p
+    }
+    val small = where.filterNot(big.contains)
+    val filtered =
+      if (small.isEmpty) df else df.filter(small.map(rowFilter).reduce(_ && _))
+    big.foldLeft(filtered) { (acc, p) =>
+      val keys = p.keys.filter(_ != null)
+      val local = df.sparkSession.createDataFrame(
+        keys.map(org.apache.spark.sql.Row(_)).asJava,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(p.column,
+            keys.headOption.map(org.apache.spark.sql.catalyst.expressions
+              .Literal(_).dataType).getOrElse(df.schema(p.column).dataType)))))
+      acc.join(org.apache.spark.sql.functions.broadcast(local),
+        Seq(p.column), "left_semi")
+    }
+  }
+
+  /** DYNAMIC file pruning — an IN-pruned [[readAt]] whose key set comes
+    * from a DIMENSION-SIDE frame at runtime instead of from literals:
+    * the semi-join shape every star-schema needle query has (`fact JOIN
     * (small filtered dim)`), pruned at the MANIFEST level. The dim
     * side's distinct keys are collected (the same driver-bounded
     * broadcast Spark's own dynamic partition pruning performs on its
@@ -2363,12 +2330,11 @@ object SnapshotTable {
     * broadcast-side DPP scale, NOT the biggest list the driver could
     * physically hold) and probed against the fact version's per-file
     * blooms, so the fact side opens ~the files that hold matching
-    * keys. The residual row filter is an IN literal up to
-    * [[InlineInLiteralMax]] keys (parquet-pushable) and a broadcast
-    * semi-join on a LOCAL relation above it (a 10⁴-literal IN bloats
-    * the Catalyst tree and codegen; the semi-join costs one small
-    * build side) — either way the answer is byte-identical to the
-    * full-scan semi-join.
+    * keys. An empty dim side is a valid query whose answer is zero
+    * rows — the perfect prune, no fact file opens. Past
+    * [[InlineInLiteralMax]] keys the residual is a broadcast semi-join;
+    * either way the answer is byte-identical to the full-scan
+    * semi-join.
     *
     * @note BEHAVIORAL CHANGE (r19): the default `maxKeys` dropped from
     *       `1 << 20` to `1 << 16`. A caller whose dim side holds
@@ -2391,240 +2357,7 @@ object SnapshotTable {
     require(keys.size <= maxKeys,
       s"readWhereInFrom: dim side exceeds maxKeys=$maxKeys distinct " +
         "keys — too big for per-key bloom probing; use a shuffle join")
-    if (keys.isEmpty)
-      // a dim side with no matches is a VALID query whose semi-join
-      // answer is zero rows — the perfect prune (no fact files open),
-      // not an error
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        readAt(spark, dir, version).schema)
-    else if (keys.size <= InlineInLiteralMax)
-      readWhereIn(spark, dir, version, column, keys)
-    else {
-      // large key set: residual as a broadcast LEFT SEMI against a
-      // local relation of the already-collected keys (no file leaves,
-      // no re-read of the dim side). Null keys never match under
-      // either form — IN and the equi-semi-join are both null-rejecting
-      // — so the answers coincide.
-      import scala.jdk.CollectionConverters._
-      val keyField = keysDf.schema.fields.head
-      val local = spark.createDataFrame(
-        keys.filter(_ != null).map(org.apache.spark.sql.Row(_)).asJava,
-        org.apache.spark.sql.types.StructType(
-          Seq(keyField.copy(name = column))))
-      prunedInScan(spark, dir, version, column, keys)
-        .join(org.apache.spark.sql.functions.broadcast(local),
-          Seq(column), "left_semi")
-    }
-  }
-
-  /** File-skipping decision for `column BETWEEN lo AND hi` on a stats-
-    * carrying version: returns (surviving file paths, total file
-    * count). A file survives iff its [min,max] interval overlaps
-    * [lo,hi]; an all-null file (no min/max) cannot match a range
-    * predicate and is pruned. Absent or column-less stats are a LOUD
-    * error, not a silent full scan — a caller relying on skipping must
-    * know when the manifest it priced its query on is missing.
-    */
-  def pruneFiles(dir: String, version: Long, column: String,
-      lo: Any, hi: Any): (Seq[String], Int) = {
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFiles targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFiles covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar")
-    val stats = readStats(dir, version).filter(_.col == column)
-    require(stats.nonEmpty,
-      s"no per-file stats for column '$column' on $dir v$version — " +
-        "commit with statsCols to enable file skipping")
-    val loS = String.valueOf(lo)
-    val hiS = String.valueOf(hi)
-    val kept = stats.filter { st =>
-      (st.min, st.max) match {
-        case (Some(mn), Some(mx)) =>
-          cmpStat(st.typ, mn, hiS) <= 0 && cmpStat(st.typ, mx, loS) >= 0
-        case _ => false // all-null file: no row can satisfy a range
-      }
-    }
-    (kept.map(st => s"$dir/v$version/${st.file}"), stats.size)
-  }
-
-  /** Stats-pruned range read: `readAt(version).filter(column between
-    * lo and hi)` that opens ONLY the files whose min/max admit a
-    * match. The row-level filter still applies (file stats are a
-    * superset bound), so the answer is byte-identical to the full
-    * scan — the pruning is pure I/O savings, which is the entire game
-    * on an unpartitioned 100 TB predicate read. `basePath` keeps
-    * hive-partition columns resolving when the commit was partitioned.
-    * Merge-on-read delete commits resolve like [[readAt]]: pruning on
-    * the data version's sidecar, `_deletes` anti-joined on top.
-    */
-  def readWhere(spark: SparkSession, dir: String, version: Long,
-      column: String, lo: Any, hi: Any): DataFrame = baseOf(dir, version) match {
-    case Some(b) =>
-      val dels = spark.read.parquet(s"$dir/v$version/_deletes")
-      readWhere(spark, dir, b, column, lo, hi)
-        .join(dels, dels.columns.toSeq, "left_anti")
-    case None =>
-      val (files, _) = pruneFiles(dir, version, column, lo, hi)
-      val vdir = s"$dir/v$version"
-      val base =
-        if (files.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            spark.read.parquet(vdir).schema)
-        else spark.read.option("basePath", vdir).parquet(files: _*)
-      base.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
-  // ------------------------------- conjunctive multi-column skipping
-
-  /** One term of a conjunctive file-skipping predicate. Real predicates
-    * are ANDs over several columns; a single-column prune leaves the
-    * other terms' skipping power on the table.
-    */
-  sealed trait PrunePredicate { def column: String }
-
-  /** `column BETWEEN lo AND hi` — decided against the stats manifest
-    * (per-file min/max overlap).
-    */
-  final case class RangePredicate(column: String, lo: Any, hi: Any)
-      extends PrunePredicate
-
-  /** `column IN (keys)` — decided against the per-file bloom sidecar
-    * (a file survives iff any key might be present).
-    */
-  final case class InPredicate(column: String, keys: Seq[Any])
-      extends PrunePredicate
-
-  /** `column IS NULL` / `IS NOT NULL` — decided against the stats
-    * manifest's per-file null counts: a file with zero nulls cannot
-    * satisfy IS NULL, an all-null file cannot satisfy IS NOT NULL.
-    * The null-count side of the Delta/Iceberg stats record, which
-    * range and bloom terms can't use (neither sidecar sees nulls).
-    */
-  final case class NullPredicate(column: String, isNull: Boolean)
-      extends PrunePredicate
-
-  /** Survivors of one range term, decided as a DataFrame FILTER over
-    * the [[manifest]] table (not a driver parse loop — at 10⁵ files
-    * the decision distributes; the collect is survivors-only, the same
-    * driver-bounded file list every format's planner holds). A file
-    * survives iff its [min,max] overlaps [lo,hi], compared numerically
-    * for numeric-tagged columns and lexicographically for
-    * string/date-tagged ones; an all-null file (null min/max) prunes.
-    * Loud error when the column carries no stats rows.
-    */
-  private def rangeSurvivors(m: DataFrame, dir: String, version: Long,
-      p: RangePredicate): Set[String] = {
-    val loS = String.valueOf(p.lo)
-    val hiS = String.valueOf(p.hi)
-    val numericBounds =
-      scala.util.Try { loS.toDouble; hiS.toDouble }.isSuccess
-    val strCond = col("min_str") <= lit(hiS) && col("max_str") >= lit(loS)
-    val cond =
-      if (numericBounds)
-        org.apache.spark.sql.functions.when(
-          col("col_type").isin("long", "double", "decimal"),
-          col("min_num") <= lit(hiS.toDouble) &&
-            col("max_num") >= lit(loS.toDouble))
-          .otherwise(strCond)
-      else strCond
-    val rows = m.filter(col("column") === p.column)
-      .select(col("file"),
-        org.apache.spark.sql.functions.coalesce(cond, lit(false)).as("keep"))
-      .collect()
-    require(rows.nonEmpty,
-      s"no per-file stats for column '${p.column}' on $dir v$version — " +
-        "commit with statsCols to enable file skipping")
-    rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet
-  }
-
-  /** Survivors of one null term, decided over the [[manifest]] table
-    * like [[rangeSurvivors]]: IS NULL keeps files whose null count is
-    * positive, IS NOT NULL keeps files with at least one non-null row.
-    * Loud when the column carries no stats rows, same contract.
-    */
-  private def nullSurvivors(m: DataFrame, dir: String, version: Long,
-      p: NullPredicate): Set[String] = {
-    val cond =
-      if (p.isNull) col("null_count") > 0
-      else col("null_count") < col("row_count")
-    val rows = m.filter(col("column") === p.column)
-      .select(col("file"),
-        org.apache.spark.sql.functions.coalesce(cond, lit(false)).as("keep"))
-      .collect()
-    require(rows.nonEmpty,
-      s"no per-file stats for column '${p.column}' on $dir v$version — " +
-        "commit with statsCols to enable file skipping")
-    rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet
-  }
-
-  /** File-skipping decision for a CONJUNCTION of predicates — the shape
-    * real queries have (`WHERE k BETWEEN … AND bucket IN (…)`): each
-    * term's survivor set comes from its own sidecar (ranges from the
-    * stats manifest, INs from the bloom), and the sets INTERSECT, so
-    * the conjunction prunes at least as hard as its strongest term and
-    * usually strictly harder — on a 2-D-clustered 100 TB layout that is
-    * the difference between "one stripe" and "one cell". Same contract
-    * as the single-term prunes: a term whose sidecar is missing is a
-    * LOUD error, never a silent no-op (a silently skipped term would
-    * still be correct here — survivors only shrink — but a caller who
-    * priced the query on that term's skipping must know).
-    */
-  def pruneFilesMulti(spark: SparkSession, dir: String, version: Long,
-      preds: Seq[PrunePredicate]): (Seq[String], Int) = {
-    require(preds.nonEmpty, "pruneFilesMulti needs at least one predicate")
-    require(baseOf(dir, version).isEmpty,
-      s"pruneFilesMulti targets data versions; v$version of $dir is a " +
-        "merge-on-read delete commit — compact first or prune its base")
-    require(appendBaseOf(dir, version).isEmpty,
-      s"pruneFilesMulti covers one generation; v$version of $dir is an " +
-        "append commit — prune each generation against its own sidecar")
-    lazy val m = manifest(spark, dir, version)
-    val survivorSets: Seq[Set[String]] = preds.map {
-      case r: RangePredicate => rangeSurvivors(m, dir, version, r)
-      case i: InPredicate =>
-        val (kept, _) = pruneFilesBloom(spark, dir, version, i.column, i.keys)
-        kept.map(_.stripPrefix(s"$dir/v$version/")).toSet
-      case n: NullPredicate => nullSurvivors(m, dir, version, n)
-    }
-    val allFiles: Set[String] = {
-      val s = readStats(dir, version).map(_.file).toSet
-      if (s.nonEmpty) s else readBloom(dir, version).map(_._1).toSet
-    }
-    val kept = survivorSets.reduce(_ intersect _)
-    (kept.toSeq.sorted.map(f => s"$dir/v$version/$f"), allFiles.size)
-  }
-
-  /** Conjunction-pruned read: `readAt(version).filter(AND(preds))` that
-    * opens only the files every term's sidecar admits. Row-level
-    * filters for ALL terms still apply (stats are a superset bound,
-    * blooms keep false positives), so the answer is byte-identical to
-    * the full scan — pure I/O savings, like [[readWhere]]. Merge-on-
-    * read delete commits resolve like [[readAt]]: pruning on the data
-    * version's sidecars, `_deletes` anti-joined on top.
-    */
-  def readWhereMulti(spark: SparkSession, dir: String, version: Long,
-      preds: Seq[PrunePredicate]): DataFrame = baseOf(dir, version) match {
-    case Some(b) =>
-      val dels = spark.read.parquet(s"$dir/v$version/_deletes")
-      readWhereMulti(spark, dir, b, preds)
-        .join(dels, dels.columns.toSeq, "left_anti")
-    case None =>
-      val (files, _) = pruneFilesMulti(spark, dir, version, preds)
-      val vdir = s"$dir/v$version"
-      val base =
-        if (files.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            spark.read.parquet(vdir).schema)
-        else spark.read.option("basePath", vdir).parquet(files: _*)
-      base.filter(preds.map {
-        case RangePredicate(c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi)
-        case InPredicate(c, keys) => col(c).isin(keys: _*)
-        case NullPredicate(c, true) => col(c).isNull
-        case NullPredicate(c, false) => col(c).isNotNull
-      }.reduce(_ && _))
+    readAt(spark, dir, version, Seq(InPredicate(column, keys)))
   }
 
   // -------------------------------------------------------- maintenance

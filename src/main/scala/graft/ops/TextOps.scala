@@ -38,29 +38,11 @@ object TextOps {
     size(filter(toks, t => array_contains(stopArr, t)))
   }
 
-  /** Fraction of tokens in `stop` (stopword-density quality signal). */
-  def stopwordRatio(c: Column, stop: Seq[String]): Column =
-    round(
-      stopwordHits(tokens(c), stop).cast("double") / nullif(nTokens(c), lit(0)),
-      4)
-
   /** Fraction of characters that are punctuation (non-word, non-space). */
   def punctRatio(c: Column): Column =
     round(
       (length(c) - length(regexp_replace(c, "[^\\w\\s]", "")))
         .cast("double") / nullif(length(c), lit(0)),
-      4)
-
-  /** Composite quality score in [0,1]: stopword density + length prior +
-    * punctuation cleanliness. The exact weights are a policy choice; the
-    * shape (cheap per-row signals combined linearly) is the standard
-    * pre-filter for web-scale corpora.
-    */
-  def qualityScore(c: Column, stop: Seq[String]): Column =
-    round(
-      lit(0.3) * stopwordRatio(c, stop)
-        + lit(0.3) * least(nTokens(c).cast("double") / 200.0, lit(1.0))
-        + lit(0.4) * (lit(1.0) - punctRatio(c)),
       4)
 
   /** Count of tokens from `markers` present in the text — the per-language
@@ -90,12 +72,10 @@ object TextOps {
     }
   }
 
-  /** BPE-ish subword count estimate: ceil(len/4) per whitespace token —
-    * the standard chars/4 heuristic, exact enough for corpus budgeting.
+  /** BPE-ish subword count estimate over a materialized token array
+    * (see [[stopwordHits]] note): ceil(len/4) per whitespace token — the
+    * standard chars/4 heuristic, exact enough for corpus budgeting.
     */
-  def bpeTokenEstimate(c: Column): Column = bpeFromTokens(tokens(c))
-
-  /** Same, over a materialized token array (see [[stopwordHits]] note). */
   def bpeFromTokens(toks: Column): Column =
     aggregate(
       toks,

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
 import graft.ops.SnapshotTable
 
 /** Dim-driven bloom file pruning AS A PLANNER RULE — the explicit
-  * [[graft.ops.SnapshotTable.readWhereInFrom]] API delivered under the
+  * [[graft.ops.SnapshotTable.readWhereInFrom]] read delivered under the
   * plain join syntax, the way [[GlobalSeqId]] delivers the distributed
   * row_number: a `Rule[LogicalPlan]` recognizes
   * `fact JOIN small-dim ON fact.k = dim.k` where the fact side is a
@@ -54,7 +54,8 @@ object SnapshotJoinPrune {
   }
 
   /** A dim side bigger than this is not a needle lookup — leave the
-    * shuffle join alone (the same bound readWhereInFrom enforces).
+    * shuffle join alone (the same bound
+    * [[graft.ops.SnapshotTable.readWhereInFrom]] enforces).
     */
   val MaxDimKeys: Int = 1 << 16
 
@@ -122,8 +123,8 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
     * internal Int (days since epoch) would canonicalize differently
     * from the build side's ISO string — a silent false NEGATIVE, i.e.
     * wrong results — so anything else is a near-miss that keeps the
-    * plain join (the explicit readWhereIn API, which takes EXTERNAL
-    * values, still covers dates).
+    * plain join (an explicit `SnapshotTable.readAt(…, where)` IN term,
+    * which takes EXTERNAL values, still covers dates).
     */
   private def localKeys(plan: LogicalPlan,
       attr: AttributeReference): Option[Seq[Any]] = plan match {
@@ -193,6 +194,14 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
       }
     }
 
+  /** Whether the version carries a bloom table at all — the cheap
+    * fact-side precondition checked before anything expensive (in the
+    * DPP-style path, before the dim subquery ever runs).
+    */
+  private def hasBloomSidecar(dir: String, version: Long): Boolean =
+    java.nio.file.Files.exists(
+      java.nio.file.Paths.get(dir, s"v$version", "_bloomtab"))
+
   /** The survivor-file decision for (dir, version, column, keys) —
     * computed at most once per distinct input (see
     * [[SnapshotJoinPrune.decisionCache]]); the filesystem probe, the
@@ -200,16 +209,6 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
     * compute so repeat optimizer iterations over an unprunable join are
     * a single map lookup.
     */
-  /** Whether the version carries a bloom sidecar at all — the cheap
-    * fact-side precondition checked before anything expensive (in the
-    * DPP-style path, before the dim subquery ever runs).
-    */
-  private def hasBloomSidecar(dir: String, version: Long): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, s"v$version", "_bloomtab")) ||
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, s"v$version", "_bloom.tsv"))
-
   private def decideFiles(spark: SparkSession, dir: String, version: Long,
       column: String, keys: Seq[Any]): Option[Seq[String]] = {
     val cache = SnapshotJoinPrune.decisionCache
@@ -223,8 +222,8 @@ object SnapshotBloomJoinRule extends Rule[LogicalPlan] {
           s"v$version — plain join kept (commit with bloomCols to enable)")
         None
       } else try {
-        val (files, total) = SnapshotTable.pruneFilesBloom(
-          spark, dir, version, column, keys)
+        val (files, total) = SnapshotTable.pruneFiles(spark, dir, version,
+          Seq(SnapshotTable.InPredicate(column, keys)))
         if (files.size >= total) None // nothing to prune; keep the plan
         else Some(files)
       } catch {

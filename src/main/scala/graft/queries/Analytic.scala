@@ -297,7 +297,7 @@ object Analytic {
     * per-file term BLOOM, and the corpus scalars (N, Σdl) ride the
     * commit's metadata so query time needs no corpus access at all.
     * The QUERY answers BM25 top-k entirely from the index:
-    * [[SnapshotTable.readWhereIn]] opens only the posting files whose
+    * an IN-pruned [[SnapshotTable.readAt]] opens only the posting files whose
     * bloom admits a query term (df/tf/dl come exactly from those rows
     * — a bloom keeps every file holding a query term, so df is exact),
     * and the scalars come from the commit metadata. Loud requires pin
@@ -374,12 +374,12 @@ object Analytic {
     val meta = SnapshotTable.readMeta(idxBase, v1)
     val nDocs = meta("n_docs").toLong
     val avgdl = meta("sum_dl").toDouble / nDocs
-    val (kept, total) =
-      SnapshotTable.pruneFilesBloom(s, idxBase, v1, "term", terms)
+    val where = Seq(SnapshotTable.InPredicate("term", terms))
+    val (kept, total) = SnapshotTable.pruneFiles(s, idxBase, v1, where)
     require(kept.nonEmpty && kept.size < total,
       s"the term bloom must prune strictly (kept ${kept.size} of $total " +
         "posting files) — the index layout regressed")
-    val hits = SnapshotTable.readWhereIn(s, idxBase, v1, "term", terms)
+    val hits = SnapshotTable.readAt(s, idxBase, v1, where)
     require(hits.inputFiles.length == kept.size,
       s"the posting scan must read EXACTLY the bloom survivor list: " +
         s"${hits.inputFiles.length} opened vs ${kept.size}")
@@ -431,8 +431,8 @@ object Analytic {
     * that appends would have to rewrite). Loud requires: the append
     * wrote ONLY the batch's postings; BOTH generations prune strictly
     * under the query's term blooms
-    * ([[SnapshotTable.pruneFilesBloomOwn]] per generation); the chain
-    * read ([[SnapshotTable.readWhereInChain]]) opens EXACTLY the two
+    * ([[SnapshotTable.pruneFiles]] per generation); the pruned chain
+    * read ([[SnapshotTable.readAt]] with the IN term) opens EXACTLY the two
     * survivor lists; and the final plan touches only index files. The
     * oracle recomputes BM25 over the FULL corpus from the raw
     * documents — maintenance must be invisible to scores.
@@ -481,15 +481,15 @@ object Analytic {
     val nDocs = metas.map(_("n_docs").toLong).sum
     val avgdl = metas.map(_("sum_dl").toLong).sum.toDouble / nDocs
     // (c) the query prunes strictly in BOTH generations
+    val where = Seq(SnapshotTable.InPredicate("term", terms))
     val keptPerGen = SnapshotTable.chainOf(idxBase, v2).map { g =>
-      val (kept, total) =
-        SnapshotTable.pruneFilesBloomOwn(s, idxBase, g, "term", terms)
+      val (kept, total) = SnapshotTable.pruneFiles(s, idxBase, g, where)
       require(kept.nonEmpty && kept.size < total,
         s"generation v$g must prune strictly for the query terms " +
           s"(kept ${kept.size} of $total posting files)")
       kept.size
     }
-    val hits = SnapshotTable.readWhereInChain(s, idxBase, v2, "term", terms)
+    val hits = SnapshotTable.readAt(s, idxBase, v2, where)
     require(hits.inputFiles.length == keptPerGen.sum,
       s"the chain read must open EXACTLY the per-generation survivor " +
         s"lists: ${hits.inputFiles.length} vs ${keptPerGen.sum}")
@@ -580,7 +580,8 @@ object Analytic {
         .map(g => SnapshotTable.readMeta(idxBase, g))
       val nDocs = metas.map(_("n_docs").toLong).sum
       val avgdl = metas.map(_("sum_dl").toLong).sum.toDouble / nDocs
-      SnapshotTable.readWhereInChain(s, idxBase, tip, "term", terms)
+      SnapshotTable.readAt(s, idxBase, tip,
+          Seq(SnapshotTable.InPredicate("term", terms)))
         .withColumn("df", count(lit(1)).over(Window.partitionBy($"term")))
         .withColumn("idf",
           log((lit(nDocs.toDouble) - $"df" + 0.5) / ($"df" + 0.5) + 1))
@@ -630,15 +631,15 @@ object Analytic {
       metasAfter.map(_("sum_dl").toLong).sum ==
         metaBefore.map(_("sum_dl").toLong).sum,
       "the folded chain's corpus scalars must equal the pre-fold totals")
+    val where = Seq(SnapshotTable.InPredicate("term", terms))
     val keptPerGen = SnapshotTable.chainOf(idxBase, vOpt).map { g =>
-      val (kept, total) =
-        SnapshotTable.pruneFilesBloomOwn(s, idxBase, g, "term", terms)
+      val (kept, total) = SnapshotTable.pruneFiles(s, idxBase, g, where)
       require(kept.nonEmpty && kept.size < total,
         s"post-fold generation v$g must prune strictly " +
           s"(kept ${kept.size} of $total posting files)")
       kept.size
     }
-    val hits = SnapshotTable.readWhereInChain(s, idxBase, vOpt, "term", terms)
+    val hits = SnapshotTable.readAt(s, idxBase, vOpt, where)
     require(hits.inputFiles.length == keptPerGen.sum,
       s"the post-fold chain read must open EXACTLY the survivor lists: " +
         s"${hits.inputFiles.length} vs ${keptPerGen.sum}")

@@ -489,8 +489,8 @@ object LakeOps {
     * Iceberg manifest metrics): the commit writes a per-file
     * min/max/nullCount sidecar for `o_orderkey`, the data is
     * range-clustered on that key (sort-on-write — the layout that
-    * makes min/max bite), and [[SnapshotTable.readWhere]] prunes files
-    * whose [min,max] cannot admit the predicate BEFORE the scan. The
+    * makes min/max bite), and a pruned [[SnapshotTable.readAt]] skips
+    * files whose [min,max] cannot admit the predicate BEFORE the scan. The
     * gate is three-layered: (a) a loud in-query require that strictly
     * fewer files survive pruning than the version contains AND that
     * the scan's actual input-file list equals the pruned list — a
@@ -516,11 +516,12 @@ object LakeOps {
     // the probe bound: first ~octile of the keyspace — a 1-row scalar
     // (bounded driver bridge), recomputed identically by the oracle
     val hi = orders.agg(max($"o_orderkey")).head.getLong(0) / 8
-    val (kept, total) = SnapshotTable.pruneFiles(base, v1, "o_orderkey", 1L, hi)
+    val where = Seq(SnapshotTable.RangePredicate("o_orderkey", 1L, hi))
+    val (kept, total) = SnapshotTable.pruneFiles(s, base, v1, where)
     require(kept.nonEmpty && kept.size < total,
       s"stats skipping must prune strictly (kept ${kept.size} of $total " +
         s"files for o_orderkey <= $hi) — min/max sidecar regressed")
-    val pruned = SnapshotTable.readWhere(s, base, v1, "o_orderkey", 1L, hi)
+    val pruned = SnapshotTable.readAt(s, base, v1, where)
     require(pruned.inputFiles.length == kept.size,
       s"the scan must read EXACTLY the pruned file list: " +
         s"${pruned.inputFiles.length} opened vs ${kept.size} pruned-to")
@@ -608,7 +609,7 @@ object LakeOps {
     * but whose layout is `repartitionByRange` + fresh `statsCols`: a
     * rewrite, priced honestly as one, after which the SAME predicate
     * read opens strictly fewer files than v2 holds. The answer columns
-    * are read through the optimized [[SnapshotTable.readWhere]] and
+    * are read through a pruned [[SnapshotTable.readAt]] of v2 and
     * must match DuckDB computing the predicate over the whole table —
     * clustering is pure I/O layout, never an answer change — and the
     * before/after file counts ride in the output row so the oracle
@@ -628,20 +629,19 @@ object LakeOps {
       base, expectedVersion = SnapshotTable.ExpectEmpty,
       statsCols = Seq("o_orderkey"))
     val hi = orders.agg(max($"o_orderkey")).head().getLong(0) / 8
-    val (keptBefore, totalBefore) =
-      SnapshotTable.pruneFiles(base, v1, "o_orderkey", 1L, hi)
+    val where = Seq(SnapshotTable.RangePredicate("o_orderkey", 1L, hi))
+    val (keptBefore, totalBefore) = SnapshotTable.pruneFiles(s, base, v1, where)
     require(keptBefore.size == totalBefore,
       s"the ingest layout must defeat range skipping (kept " +
         s"${keptBefore.size} of $totalBefore) — fixture layout drifted")
     // v2: OPTIMIZE — identity data, clustered layout, fresh stats
     val v2 = SnapshotTable.transact(s, base, statsCols = Seq("o_orderkey"))(
       cur => cur.get.repartitionByRange(8, $"o_orderkey"))
-    val (keptAfter, totalAfter) =
-      SnapshotTable.pruneFiles(base, v2, "o_orderkey", 1L, hi)
+    val (keptAfter, totalAfter) = SnapshotTable.pruneFiles(s, base, v2, where)
     require(keptAfter.size < totalAfter,
       s"OPTIMIZE must make range skipping strict (kept ${keptAfter.size} " +
         s"of $totalAfter) — clustering or the fresh sidecar regressed")
-    val pruned = SnapshotTable.readWhere(s, base, v2, "o_orderkey", 1L, hi)
+    val pruned = SnapshotTable.readAt(s, base, v2, where)
     require(pruned.inputFiles.length == keptAfter.size,
       s"the optimized scan must read EXACTLY the pruned list: " +
         s"${pruned.inputFiles.length} vs ${keptAfter.size}")
@@ -673,13 +673,14 @@ object LakeOps {
     * gate PROVES with an in-query require (`pruneFiles` over the probe
     * keys' span must keep all files). The per-file bloom sidecar
     * ([[SnapshotTable.commit]] `bloomCols`) then answers "definitely
-    * not in this file" per key, and [[SnapshotTable.readWhereIn]] opens
-    * only the admitting files — the Iceberg/Parquet bloom story: a
-    * needle-in-100 TB lookup on an unclustered key costs ~the files
+    * not in this file" per key, and an IN-pruned [[SnapshotTable.readAt]]
+    * opens only the admitting files — the Iceberg/Parquet bloom story:
+    * a needle-in-100 TB lookup on an unclustered key costs ~the files
     * holding the needles, not a full scan. Three-layered like the stats
-    * gate: (a) loud requires that bloom pruning is strict while range
-    * pruning is proven powerless, and that the scan's input-file list
-    * equals the bloom-pruned list; (b) the looked-up rows' count and
+    * gate: (a) loud requires that range pruning is proven powerless
+    * while the bloom-pruned scan (one distributed probe decides its
+    * file list) opens strictly fewer files than the version holds;
+    * (b) the looked-up rows' count and
     * exact money total match DuckDB running the same IN-subquery over
     * the whole table (no false negatives, fp rows removed by the
     * row-level filter); (c) PlanAuditSpec re-asserts the file-count
@@ -711,21 +712,18 @@ object LakeOps {
         min(when(pmod($"o_orderkey", lit(100)) === 7, $"o_orderkey")),
         max(when(pmod($"o_orderkey", lit(100)) === 3, $"o_orderkey"))).head
     val keys = (0 to 3).map(ext.getLong).distinct.sorted
-    val (bloomKept, total) = SnapshotTable.pruneFilesBloom(base, v1, "o_orderkey", keys)
-    require(bloomKept.size < total,
-      s"bloom skipping must prune strictly (kept ${bloomKept.size} of $total " +
-        s"files for ${keys.size} point keys) — bloom sidecar regressed")
     // the contrast witness: the same lookup as a RANGE over the keys'
     // span keeps every file, because the layout scatters the key
-    val (statsKept, statsTotal) =
-      SnapshotTable.pruneFiles(base, v1, "o_orderkey", keys.min, keys.max)
-    require(statsKept.size == statsTotal,
+    val (statsKept, total) = SnapshotTable.pruneFiles(s, base, v1,
+      Seq(SnapshotTable.RangePredicate("o_orderkey", keys.min, keys.max)))
+    require(statsKept.size == total,
       s"the powerlessness witness broke: range pruning kept ${statsKept.size} " +
-        s"of $statsTotal files — the layout is no longer key-scattered")
-    val looked = SnapshotTable.readWhereIn(s, base, v1, "o_orderkey", keys)
-    require(looked.inputFiles.length == bloomKept.size,
-      s"the scan must read EXACTLY the bloom-pruned file list: " +
-        s"${looked.inputFiles.length} opened vs ${bloomKept.size} pruned-to")
+        s"of $total files — the layout is no longer key-scattered")
+    val looked = SnapshotTable.readAt(s, base, v1,
+      Seq(SnapshotTable.InPredicate("o_orderkey", keys)))
+    require(looked.inputFiles.length < total,
+      s"bloom skipping must prune strictly (opened ${looked.inputFiles.length} " +
+        s"of $total files for ${keys.size} point keys) — bloom sidecar regressed")
     looked
       .agg(count(lit(1)).as("n_rows"), sum($"price_micro").as("s_micro"))
       .select($"n_rows", Exact.microSumTo4dp("s_micro").as("sum_price"),
@@ -822,12 +820,12 @@ object LakeOps {
     * different dimension: the key-range term keeps ~one okey stripe
     * per parity half, the parity IN term (decided by the per-file
     * bloom) keeps one half — and their INTERSECTION
-    * ([[SnapshotTable.pruneFilesMulti]], range terms decided as a
-    * DataFrame filter over the committed `_manifest` table) keeps
+    * ([[SnapshotTable.pruneFiles]], range terms decided on the driver
+    * from the stats sidecar) keeps
     * strictly fewer files than the BEST single term alone, which the
     * gate requires loudly. On a 100 TB table this is the difference
     * between reading a stripe and reading a cell. The answer columns
-    * come through [[SnapshotTable.readWhereMulti]] (row filters for
+    * come through a pruned [[SnapshotTable.readAt]] (row filters for
     * every term still apply) and must match DuckDB computing the
     * compound WHERE over the whole table — skipping is pure I/O,
     * never an answer change — and the scan's input-file list must
@@ -850,17 +848,16 @@ object LakeOps {
     val hi = orders.agg(max($"o_orderkey")).head.getLong(0) / 8
     val rangeTerm = RangePredicate("o_orderkey", 1L, hi)
     val inTerm = InPredicate("par", Seq(1L))
-    val (rangeKept, total) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(rangeTerm))
-    val (inKept, _) = SnapshotTable.pruneFilesMulti(s, base, v1, Seq(inTerm))
+    val (rangeKept, total) = SnapshotTable.pruneFiles(s, base, v1, Seq(rangeTerm))
+    val (inKept, _) = SnapshotTable.pruneFiles(s, base, v1, Seq(inTerm))
     val (conjKept, _) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(rangeTerm, inTerm))
+      SnapshotTable.pruneFiles(s, base, v1, Seq(rangeTerm, inTerm))
     require(conjKept.nonEmpty && conjKept.size < rangeKept.size &&
       conjKept.size < inKept.size,
       s"the conjunction must out-prune its best single term: conj " +
         s"${conjKept.size}, range ${rangeKept.size}, in ${inKept.size} " +
         s"of $total files — a term's sidecar regressed")
-    val pruned = SnapshotTable.readWhereMulti(s, base, v1, Seq(rangeTerm, inTerm))
+    val pruned = SnapshotTable.readAt(s, base, v1, Seq(rangeTerm, inTerm))
     require(pruned.inputFiles.length == conjKept.size,
       s"the scan must read EXACTLY the conjunction's survivor list: " +
         s"${pruned.inputFiles.length} opened vs ${conjKept.size} pruned-to")
@@ -996,12 +993,12 @@ object LakeOps {
     val tomb = keys.min
     val v2 = SnapshotTable.commitDeletes(Seq(tomb).toDF("o_orderkey"), base,
       expectedVersion = v1)
-    val (bloomKept, total) =
-      SnapshotTable.pruneFilesBloom(base, v1, "o_orderkey", keys)
+    val where = Seq(SnapshotTable.InPredicate("o_orderkey", keys))
+    val (bloomKept, total) = SnapshotTable.pruneFiles(s, base, v1, where)
     require(bloomKept.nonEmpty && bloomKept.size < total,
       s"bloom skipping must stay strict under the chain (kept " +
         s"${bloomKept.size} of $total files) — sidecar regressed")
-    val looked = SnapshotTable.readWhereIn(s, base, v2, "o_orderkey", keys)
+    val looked = SnapshotTable.readAt(s, base, v2, where)
     val dataFiles = looked.inputFiles.filter(_.contains(s"/v$v1/"))
     require(dataFiles.length == bloomKept.size,
       s"the MOR lookup must read EXACTLY the bloom-pruned data files: " +
@@ -1155,8 +1152,8 @@ object LakeOps {
     val dimKeys = Tables.orders(s, dir)
       .filter($"o_custkey" === cust).select($"o_orderkey")
     val keys = dimKeys.distinct().collect().map(_.getLong(0)).toSeq
-    val (kept, total) =
-      SnapshotTable.pruneFilesBloom(base, v1, "l_orderkey", keys)
+    val (kept, total) = SnapshotTable.pruneFiles(s, base, v1,
+      Seq(SnapshotTable.InPredicate("l_orderkey", keys)))
     require(kept.nonEmpty && kept.size < total,
       s"dim-driven skipping must prune strictly (kept ${kept.size} of " +
         s"$total files for ${keys.size} order keys) — sidecar regressed")
@@ -1229,8 +1226,8 @@ object LakeOps {
     // the whole point: PLAIN join syntax, no pruning API in sight
     val fact = SnapshotTable.readAt(s, base, v1)
     val joined = fact.join(dim, Seq("l_orderkey"), "left_semi")
-    val (kept, total) =
-      SnapshotTable.pruneFilesBloom(base, v1, "l_orderkey", keys)
+    val (kept, total) = SnapshotTable.pruneFiles(s, base, v1,
+      Seq(SnapshotTable.InPredicate("l_orderkey", keys)))
     require(kept.nonEmpty && kept.size < total,
       s"the fixture must prune strictly (kept ${kept.size} of $total)")
     val planned = joined.queryExecution.sparkPlan.collect {
@@ -2028,7 +2025,7 @@ object LakeOps {
     * requires loudly along with the scan-file-list equality; a
     * CONJUNCTION (IS NULL ∧ key range) must out-prune the null term
     * alone, proving the null term composes with the range term in
-    * [[SnapshotTable.pruneFilesMulti]]. Answer matched by DuckDB on
+    * [[SnapshotTable.pruneFiles]]. Answer matched by DuckDB on
     * the compound WHERE.
     */
   private def snapshotNullPrune(s: SparkSession, dir: String): DataFrame = {
@@ -2046,10 +2043,8 @@ object LakeOps {
       statsCols = Seq("o_orderkey", "note"))
     val isNull = NullPredicate("note", isNull = true)
     val notNull = NullPredicate("note", isNull = false)
-    val (nullKept, total) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(isNull))
-    val (notNullKept, _) =
-      SnapshotTable.pruneFilesMulti(s, base, v1, Seq(notNull))
+    val (nullKept, total) = SnapshotTable.pruneFiles(s, base, v1, Seq(isNull))
+    val (notNullKept, _) = SnapshotTable.pruneFiles(s, base, v1, Seq(notNull))
     require(nullKept.nonEmpty && nullKept.size < total &&
       notNullKept.nonEmpty && notNullKept.size < total,
       s"both polarities must prune strictly: IS NULL kept " +
@@ -2057,11 +2052,11 @@ object LakeOps {
     // the conjunction composes: IS NULL ∧ first key octile
     val hi = orders.agg(max($"o_orderkey")).head.getLong(0) / 8
     val conj = Seq(isNull, RangePredicate("o_orderkey", 1L, hi))
-    val (conjKept, _) = SnapshotTable.pruneFilesMulti(s, base, v1, conj)
+    val (conjKept, _) = SnapshotTable.pruneFiles(s, base, v1, conj)
     require(conjKept.nonEmpty && conjKept.size < nullKept.size,
       s"the conjunction must out-prune IS NULL alone: ${conjKept.size} " +
         s"vs ${nullKept.size}")
-    val pruned = SnapshotTable.readWhereMulti(s, base, v1, conj)
+    val pruned = SnapshotTable.readAt(s, base, v1, conj)
     require(pruned.inputFiles.length == conjKept.size,
       s"the scan must read EXACTLY the survivor list: " +
         s"${pruned.inputFiles.length} vs ${conjKept.size}")
@@ -2272,8 +2267,8 @@ object LakeOps {
       .filter($"o_custkey" === cust)
       .select($"o_orderkey".as("l_orderkey"))
     val keys = dim.distinct().as[Long].collect().toSeq.sorted
-    val (kept, total) =
-      SnapshotTable.pruneFilesBloom(base, v1, "l_orderkey", keys)
+    val (kept, total) = SnapshotTable.pruneFiles(s, base, v1,
+      Seq(SnapshotTable.InPredicate("l_orderkey", keys)))
     require(kept.nonEmpty && kept.size < total,
       s"the fixture must prune strictly (kept ${kept.size} of $total)")
     val before = graft.plans.SnapshotJoinPrune.rewrites

@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
-import org.apache.avro.file.{DataFileReader, DataFileStream, DataFileWriter, SeekableByteArrayInput}
+import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
@@ -149,15 +149,6 @@ object AvroSource {
   }
 
   // -------------------------------------------------------------- read
-
-  /** Parse one container file's bytes to (writer schema, records) —
-    * the in-memory entry point (unit tests, small sidecar files).
-    */
-  private[sources] def openBytes(bytes: Array[Byte])
-      : DataFileReader[GenericRecord] =
-    new DataFileReader[GenericRecord](
-      new SeekableByteArrayInput(bytes),
-      new GenericDatumReader[GenericRecord]())
 
   /** Block-incremental container decode off an open input stream — the
     * executor-side scan path. `DataFileStream` holds ONE compressed

@@ -95,7 +95,8 @@ class ExtensionsSpec extends SparkSpec {
         case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
           sc.relation.location.inputFiles.length
       }.sum
-      val (kept, total) = SnapshotTable.pruneFilesBloom(dir, v, "k", Seq(7L))
+      val (kept, total) = SnapshotTable.pruneFiles(s, dir, v,
+        Seq(SnapshotTable.InPredicate("k", Seq(7L))))
       assert(kept.size < total && planned == kept.size,
         s"extended session did not prune: planned $planned, " +
           s"survivors ${kept.size} of $total")

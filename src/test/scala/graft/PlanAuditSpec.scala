@@ -117,7 +117,7 @@ class PlanAuditSpec extends SparkSpec {
   test("snapshot_stats_prune's scan opens strictly fewer files than v1 holds") {
     // same discipline for FILE-level stats skipping: the executed
     // scan's input-file list must be a strict subset of the version's
-    // data files — if the sidecar or pruneFiles regresses to a full
+    // data files — if the sidecar or readAt(…, where) regresses to a full
     // scan, this fails the build (the query's own require fires first
     // in most cases; this pins the plan even if the require is edited).
     val q = Registry.all.find(_.name == "snapshot_stats_prune").get

@@ -40,7 +40,8 @@ class SnapshotJoinPruneSpec extends SparkSpec {
     val dim = keys.toDF("k")
     val joined = SnapshotTable.readAt(iso, dir, v)
       .join(dim, Seq("k"), "left_semi")
-    val (kept, total) = SnapshotTable.pruneFilesBloom(dir, v, "k", keys)
+    val (kept, total) = SnapshotTable.pruneFiles(iso, dir, v,
+      Seq(SnapshotTable.InPredicate("k", keys)))
     assert(kept.size < total, "fixture must be prunable")
     assert(plannedFiles(joined) == kept.size,
       "the plain join must plan exactly the bloom survivor list")

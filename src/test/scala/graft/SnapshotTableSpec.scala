@@ -409,7 +409,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(e.getMessage.contains("score"))
   }
 
-  test("per-file stats skipping: readWhere opens only admitting files") {
+  test("per-file stats skipping: a range-pruned readAt opens only admitting files") {
     val dir = freshDir()
     // range-cluster by k so each of the 4 files owns a disjoint span —
     // the layout (zorder/sort-on-write) that makes min/max stats bite
@@ -420,20 +420,23 @@ class SnapshotTableSpec extends SparkSpec {
     assert(stats.map(_.file).distinct.size == 4)
     assert(stats.forall(s => s.col == "k" && s.typ == "long" && s.nulls == 0))
     assert(stats.map(_.rowCount).sum == 400)
-    val (kept, total) = SnapshotTable.pruneFiles(dir, v, "k", 10L, 20L)
+    import SnapshotTable.RangePredicate
+    val where = Seq(RangePredicate("k", 10L, 20L))
+    val (kept, total) = SnapshotTable.pruneFiles(spark, dir, v, where)
     assert(total == 4 && kept.size == 1,
       s"a one-span predicate must open one file, kept ${kept.size}/$total")
-    val got = SnapshotTable.readWhere(spark, dir, v, "k", 10L, 20L)
+    val got = SnapshotTable.readAt(spark, dir, v, where)
     assert(got.inputFiles.length == 1, "the scan itself is file-pruned")
     assert(got.select("k").as[Long].collect().sorted.toSeq == (10L to 20L))
     // answer ≡ the unpruned read (stats are a superset bound)
     assert(SnapshotTable.readAt(spark, dir, v)
       .filter($"k".between(10, 20)).count() == 11)
     // an empty-range predicate prunes everything and returns 0 rows
-    assert(SnapshotTable.readWhere(spark, dir, v, "k", 1000L, 2000L).count() == 0)
+    assert(SnapshotTable.readAt(spark, dir, v,
+      Seq(RangePredicate("k", 1000L, 2000L))).count() == 0)
     // a column without stats is a LOUD error, not a silent full scan
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFiles(dir, v, "m", 1, 2)
+      SnapshotTable.pruneFiles(spark, dir, v, Seq(RangePredicate("m", 1, 2)))
     }
   }
 
@@ -452,12 +455,13 @@ class SnapshotTableSpec extends SparkSpec {
     assert(nameStats.forall(_.typ == "string"))
     assert(stats.filter(_.col == "score").map(_.nulls).sum == 1)
     // string range prune + partition columns still resolve via basePath
-    val got = SnapshotTable.readWhere(spark, dir, v, "name", "a", "b")
+    val got = SnapshotTable.readAt(spark, dir, v,
+      Seq(SnapshotTable.RangePredicate("name", "a", "b")))
     assert(got.columns.contains("part"))
     assert(got.select("name").as[String].collect().toSet == Set("alpha"))
   }
 
-  test("per-file bloom skipping: readWhereIn opens only admitting files") {
+  test("per-file bloom skipping: an IN-pruned readAt opens only admitting files") {
     val dir = freshDir()
     // HASH-cluster by a different column so every file's k range spans
     // the whole keyspace — the layout where min/max stats are useless
@@ -469,33 +473,38 @@ class SnapshotTableSpec extends SparkSpec {
       bloomCols = Seq("k"), bloomExpectedItems = 1000)
     // the contrast: range pruning keeps everything on this layout
     // (total counts NON-EMPTY files — a hash bucket can come out empty)
-    val (rangeKept, total) = SnapshotTable.pruneFiles(dir, v, "k", 10L, 390L)
+    import SnapshotTable.{InPredicate, RangePredicate}
+    val (rangeKept, total) =
+      SnapshotTable.pruneFiles(spark, dir, v, Seq(RangePredicate("k", 10L, 390L)))
     assert(total >= 3 && rangeKept.size == total,
       s"hash layout should defeat min/max pruning, kept ${rangeKept.size}/$total")
     // bloom pruning: each k lives in exactly one file (k -> m = k%7
     // -> one hash bucket), so a single-key probe keeps ~1 file
-    val (kept, btotal) = SnapshotTable.pruneFilesBloom(dir, v, "k", Seq(10L))
+    val (kept, btotal) =
+      SnapshotTable.pruneFiles(spark, dir, v, Seq(InPredicate("k", Seq(10L))))
     assert(btotal == total && kept.nonEmpty && kept.size < btotal,
       s"single-key bloom probe kept ${kept.size}/$btotal files")
     // keys from ONE m-class (10, 17, 24 ≡ 3 mod 7) co-locate in one
     // file, so a multi-key probe still prunes
-    val got = SnapshotTable.readWhereIn(spark, dir, v, "k", Seq(10L, 17L, 24L))
+    val got = SnapshotTable.readAt(spark, dir, v,
+      Seq(InPredicate("k", Seq(10L, 17L, 24L))))
     assert(got.inputFiles.length < btotal, "the scan itself is file-pruned")
     assert(got.select("k").as[Long].collect().sorted.toSeq == Seq(10L, 17L, 24L))
     // no false negatives across every key, probed in one batch
-    val all = SnapshotTable.readWhereIn(spark, dir, v, "k", (1L to 400L))
+    val all = SnapshotTable.readAt(spark, dir, v, Seq(InPredicate("k", 1L to 400L)))
     assert(all.count() == 400, "a present key must never be pruned away")
     // absent keys return zero rows (fp files are cleaned by the filter)
-    assert(SnapshotTable.readWhereIn(spark, dir, v, "k", Seq(4040L)).count() == 0)
+    assert(SnapshotTable.readAt(spark, dir, v,
+      Seq(InPredicate("k", Seq(4040L)))).count() == 0)
     // a column without a bloom is a LOUD error, not a silent full scan
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesBloom(dir, v, "m", Seq(1))
+      SnapshotTable.pruneFiles(spark, dir, v, Seq(InPredicate("m", Seq(1))))
     }
     // and so is a bloom-less version
     val dir2 = freshDir()
     val v2 = SnapshotTable.commit(df, dir2)
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesBloom(dir2, v2, "k", Seq(1L))
+      SnapshotTable.pruneFiles(spark, dir2, v2, Seq(InPredicate("k", Seq(1L))))
     }
   }
 
@@ -536,10 +545,10 @@ class SnapshotTableSpec extends SparkSpec {
     val dir = freshDir()
     val v1 = SnapshotTable.commit(
       (1 to 100).map(i => (i.toLong, i % 3)).toDF("k", "m"), dir,
-      expectedVersion = SnapshotTable.ExpectEmpty)
+      expectedVersion = SnapshotTable.ExpectEmpty, statsCols = Seq("k"))
     val v2 = SnapshotTable.commitAppend(
       (101 to 130).map(i => (i.toLong, i % 3)).toDF("k", "m"), dir,
-      expectedVersion = v1)
+      expectedVersion = v1, statsCols = Seq("k"))
     // the chain read is base ∪ delta; the base version is untouched
     assert(SnapshotTable.readAt(spark, dir, v2).count() == 130)
     assert(SnapshotTable.readAt(spark, dir, v1).count() == 100)
@@ -573,10 +582,17 @@ class SnapshotTableSpec extends SparkSpec {
     }
     assert(keptAfter.contains(v1),
       s"v$v1 is reachable from v$v2 via _append and must survive: $keptAfter")
-    // single-generation skipping paths refuse an append version loudly
-    intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFiles(dir, v2, "k", 1L, 10L)
-    }
+    // a pruned read of an append version decides each generation
+    // against its own sidecar: the filter's answer, and exactly the
+    // generations' own survivors opened
+    val where = Seq(SnapshotTable.RangePredicate("k", 1L, 10L))
+    val pruned = SnapshotTable.readAt(spark, dir, v2, where)
+    assert(pruned.as[(Long, Int)].collect().sorted.toSeq ==
+      SnapshotTable.readAt(spark, dir, v2).filter($"k".between(1L, 10L))
+        .as[(Long, Int)].collect().sorted.toSeq)
+    assert(pruned.inputFiles.length == Seq(v1, v2).map(g =>
+      SnapshotTable.pruneFiles(spark, dir, g, where)._1.size).sum)
+    // the one-generation manifest still refuses an append version
     intercept[IllegalArgumentException] {
       SnapshotTable.manifest(spark, dir, v2)
     }
@@ -620,7 +636,7 @@ class SnapshotTableSpec extends SparkSpec {
         s"${g2.selectedPartitions.partitionCount} of 2 dirs, filters ${g2.partitionFilters}")
   }
 
-  test("pruneFilesMulti: conjunction intersects sidecars, loud misses") {
+  test("pruneFiles: conjunction intersects sidecars, loud misses") {
     val dir = freshDir()
     // 2-D layout: primary range-cluster by parity, secondary by k — so
     // a parity term and a k-range term each kill a different dimension
@@ -629,29 +645,29 @@ class SnapshotTableSpec extends SparkSpec {
       dir, expectedVersion = SnapshotTable.ExpectEmpty,
       statsCols = Seq("k", "par"), bloomCols = Seq("par"))
     import SnapshotTable.{InPredicate, RangePredicate}
-    val (rangeKept, total) = SnapshotTable.pruneFilesMulti(spark, dir, v,
+    val (rangeKept, total) = SnapshotTable.pruneFiles(spark, dir, v,
       Seq(RangePredicate("k", 1L, 50L)))
-    val (inKept, _) = SnapshotTable.pruneFilesMulti(spark, dir, v,
+    val (inKept, _) = SnapshotTable.pruneFiles(spark, dir, v,
       Seq(InPredicate("par", Seq(1L))))
-    val (conjKept, _) = SnapshotTable.pruneFilesMulti(spark, dir, v,
+    val (conjKept, _) = SnapshotTable.pruneFiles(spark, dir, v,
       Seq(RangePredicate("k", 1L, 50L), InPredicate("par", Seq(1L))))
     assert(conjKept.nonEmpty && conjKept.size < rangeKept.size &&
       conjKept.size < inKept.size,
       s"conjunction must out-prune each term: conj ${conjKept.size}, " +
         s"range ${rangeKept.size}, in ${inKept.size}, total $total")
     // the pruned read answers exactly like the full scan
-    val got = SnapshotTable.readWhereMulti(spark, dir, v,
+    val got = SnapshotTable.readAt(spark, dir, v,
       Seq(RangePredicate("k", 1L, 50L), InPredicate("par", Seq(1L))))
     assert(got.inputFiles.length == conjKept.size)
     assert(got.select("k").as[Long].collect().sorted.toSeq ==
       (1 to 50).filter(_ % 2 == 1).map(_.toLong))
     // a term with no sidecar fails loudly, never a silent no-op
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesMulti(spark, dir, v,
+      SnapshotTable.pruneFiles(spark, dir, v,
         Seq(InPredicate("k", Seq(5L)))) // no bloom on k
     }
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesMulti(spark, dir, v,
+      SnapshotTable.pruneFiles(spark, dir, v,
         Seq(RangePredicate("nope", 1L, 2L)))
     }
     // string bounds compare lexicographically against string stats
@@ -660,7 +676,7 @@ class SnapshotTableSpec extends SparkSpec {
       Seq(("alpha", 1L), ("beta", 2L), ("zeta", 3L)).toDF("name", "id")
         .repartitionByRange(3, $"name"),
       dirS, statsCols = Seq("name"))
-    val gotS = SnapshotTable.readWhereMulti(spark, dirS, vS,
+    val gotS = SnapshotTable.readAt(spark, dirS, vS,
       Seq(RangePredicate("name", "a", "c")))
     assert(gotS.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
@@ -671,11 +687,12 @@ class SnapshotTableSpec extends SparkSpec {
     val df = (1 to 400).map(i => (i.toLong, i % 7)).toDF("k", "m")
       .repartition(4, $"m")
     val v1 = SnapshotTable.commit(df, dir, statsCols = Seq("k"))
-    val (kept1, total1) = SnapshotTable.pruneFiles(dir, v1, "k", 10L, 20L)
+    val where = Seq(SnapshotTable.RangePredicate("k", 10L, 20L))
+    val (kept1, total1) = SnapshotTable.pruneFiles(spark, dir, v1, where)
     assert(kept1.size == total1, "ingest layout should defeat range pruning")
     val v2 = SnapshotTable.transact(spark, dir, statsCols = Seq("k"))(
       cur => cur.get.repartitionByRange(4, $"k"))
-    val (kept2, total2) = SnapshotTable.pruneFiles(dir, v2, "k", 10L, 20L)
+    val (kept2, total2) = SnapshotTable.pruneFiles(spark, dir, v2, where)
     assert(kept2.size == 1 && total2 == 4,
       s"optimized layout must skip: kept ${kept2.size}/$total2")
     // identity mutate: the data is byte-for-byte the same multiset
@@ -690,8 +707,9 @@ class SnapshotTableSpec extends SparkSpec {
       .toDF("name", "id").repartition(2, $"id")
     val v = SnapshotTable.commit(df, dir, bloomCols = Seq("name"),
       statsCols = Seq("id"))
+    import SnapshotTable.{InPredicate, RangePredicate}
     // string canonicalization round-trips build -> probe
-    val got = SnapshotTable.readWhereIn(spark, dir, v, "name", Seq("gamma"))
+    val got = SnapshotTable.readAt(spark, dir, v, Seq(InPredicate("name", Seq("gamma"))))
     assert(got.select("id").as[Long].collect().toSeq == Seq(3L))
     // a NULL never matches an IN probe; the row with null name is
     // reachable by other predicates, unharmed by the sidecar
@@ -701,19 +719,20 @@ class SnapshotTableSpec extends SparkSpec {
     // cannot forget a key), tombstones anti-join on top — the erased
     // key must NOT come back through the skipping path
     val vd = SnapshotTable.commitDeletes(Seq(3L).toDF("id"), dir, expectedVersion = v)
-    assert(SnapshotTable.readWhereIn(spark, dir, vd, "name", Seq("gamma")).count() == 0,
+    assert(SnapshotTable.readAt(spark, dir, vd,
+      Seq(InPredicate("name", Seq("gamma")))).count() == 0,
       "a deleted key resurfaced through the bloom path")
-    assert(SnapshotTable.readWhereIn(spark, dir, vd, "name", Seq("alpha"))
+    assert(SnapshotTable.readAt(spark, dir, vd, Seq(InPredicate("name", Seq("alpha"))))
       .select("id").as[Long].collect().toSeq == Seq(1L),
       "surviving keys must still resolve through the chain")
     // the stats-pruned range read resolves the same chain
-    assert(SnapshotTable.readWhere(spark, dir, vd, "id", 1L, 4L)
+    assert(SnapshotTable.readAt(spark, dir, vd, Seq(RangePredicate("id", 1L, 4L)))
       .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L),
-      "readWhere through a delete chain must drop exactly the tombstoned id")
-    // direct pruning on a MOR version stays a loud error (the manifest
-    // belongs to the data version)
+      "a range-pruned read through a delete chain must drop exactly the tombstoned id")
+    // direct pruning on a MOR version stays a loud error (the sidecars
+    // belong to the data version)
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesBloom(dir, vd, "name", Seq("alpha"))
+      SnapshotTable.pruneFiles(spark, dir, vd, Seq(InPredicate("name", Seq("alpha"))))
     }
   }
 
@@ -739,8 +758,8 @@ class SnapshotTableSpec extends SparkSpec {
     // java.sql.Date.toString both yield ISO yyyy-MM-dd
     val dir = freshDir()
     val v = SnapshotTable.commit(df, dir, bloomCols = Seq("day"))
-    val got = SnapshotTable.readWhereIn(spark, dir, v, "day",
-      Seq(java.sql.Date.valueOf("2024-01-06")))
+    val got = SnapshotTable.readAt(spark, dir, v, Seq(SnapshotTable.InPredicate(
+      "day", Seq(java.sql.Date.valueOf("2024-01-06")))))
     assert(got.select("k").as[Long].collect().toSeq == Seq(5L))
   }
 
@@ -987,23 +1006,26 @@ class SnapshotTableSpec extends SparkSpec {
     }
   }
 
-  test("the distributed bloom probe matches the driver-side TSV decision") {
+  test("the _bloomtab probe decides the IN-pruned read's file list") {
     val dir = freshDir()
     val v = SnapshotTable.commit(
       spark.range(2000).toDF("k").repartitionByRange(8, $"k"),
       dir, bloomCols = Seq("k"))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, s"v$v", "_bloomtab")),
-      "the bloom table must be committed beside the TSV sidecar")
+    // the bloom table is the one bloom artifact a commit writes
+    val blooms = new java.io.File(s"$dir/v$v").list().filter(_.startsWith("_bloom"))
+    assert(blooms.toSeq == Seq("_bloomtab"),
+      s"expected only the _bloomtab table, got ${blooms.mkString(", ")}")
     val keys = Seq(5L, 900L, 1750L)
-    val (viaTsv, nTsv) = SnapshotTable.pruneFilesBloom(dir, v, "k", keys)
-    val (viaTab, nTab) = SnapshotTable.pruneFilesBloom(spark, dir, v, "k", keys)
-    assert(viaTab.sorted == viaTsv.sorted && nTab == nTsv,
-      "the distributed probe diverged from the TSV decision")
+    val where = Seq(SnapshotTable.InPredicate("k", keys))
+    val (kept, total) = SnapshotTable.pruneFiles(spark, dir, v, where)
+    assert(kept.nonEmpty && kept.size < total && total == 8,
+      s"the probe must prune strictly: kept ${kept.size} of $total")
     // and the read path routes through it with identical answers
-    val got = SnapshotTable.readWhereIn(spark, dir, v, "k", keys)
+    val got = SnapshotTable.readAt(spark, dir, v, where)
+    assert(got.as[Long].collect().sorted.toSeq == SnapshotTable.readAt(spark, dir, v)
+      .filter($"k".isin(keys: _*)).as[Long].collect().sorted.toSeq)
     assert(got.as[Long].collect().toSet == keys.toSet)
-    assert(got.inputFiles.length == viaTab.size)
+    assert(got.inputFiles.length == kept.size)
   }
 
   test("commit metadata rides the version dir; chainOf skips orphans") {
@@ -1085,22 +1107,22 @@ class SnapshotTableSpec extends SparkSpec {
       df.repartitionByRange(5, $"v".isNull, $"k"), dir,
       statsCols = Seq("k", "v"))
     import SnapshotTable.{NullPredicate, RangePredicate}
-    val (nullKept, total) = SnapshotTable.pruneFilesMulti(spark, dir, ver,
+    val (nullKept, total) = SnapshotTable.pruneFiles(spark, dir, ver,
       Seq(NullPredicate("v", isNull = true)))
-    val (notNullKept, _) = SnapshotTable.pruneFilesMulti(spark, dir, ver,
+    val (notNullKept, _) = SnapshotTable.pruneFiles(spark, dir, ver,
       Seq(NullPredicate("v", isNull = false)))
     assert(nullKept.nonEmpty && nullKept.size < total)
     assert(notNullKept.nonEmpty && notNullKept.size < total)
     // answers stay byte-identical to the full scan
-    val gotNull = SnapshotTable.readWhereMulti(spark, dir, ver,
+    val gotNull = SnapshotTable.readAt(spark, dir, ver,
       Seq(NullPredicate("v", isNull = true)))
     assert(gotNull.count() == 60 && gotNull.inputFiles.length == nullKept.size)
-    val conj = SnapshotTable.readWhereMulti(spark, dir, ver,
+    val conj = SnapshotTable.readAt(spark, dir, ver,
       Seq(NullPredicate("v", isNull = false), RangePredicate("k", 0L, 10L)))
     assert(conj.select("k").as[Long].collect().sorted.toSeq == (0L to 10L))
     // a stats-less column is loud, same as the range contract
     intercept[IllegalArgumentException] {
-      SnapshotTable.pruneFilesMulti(spark, dir, ver,
+      SnapshotTable.pruneFiles(spark, dir, ver,
         Seq(NullPredicate("missing", isNull = true)))
     }
   }
@@ -1328,7 +1350,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(folded.select($"generation").distinct().count() == 5)
   }
 
-  test("readWhereInChain prunes per generation; tombstoned chains are loud") {
+  test("readAt(where) prunes per generation; tombstoned chains equal the filter") {
     val dir = freshDir()
     var tip = SnapshotTable.commit(
       spark.range(0, 100).toDF("k").repartitionByRange(4, $"k"), dir,
@@ -1339,24 +1361,46 @@ class SnapshotTableSpec extends SparkSpec {
         dir, expectedVersion = tip, bloomCols = Seq("k"))
     }
     val keys = Seq(5L, 150L, 250L) // one needle per generation
-    val got = SnapshotTable.readWhereInChain(spark, dir, tip, "k", keys)
+    val where = Seq(SnapshotTable.InPredicate("k", keys))
+    val got = SnapshotTable.readAt(spark, dir, tip, where)
     assert(got.as[Long].collect().sorted.toSeq == keys)
     // every generation contributed a pruned (not full) own-file list
     val perGen = SnapshotTable.chainOf(dir, tip).map { g =>
-      val (kept, total) =
-        SnapshotTable.pruneFilesBloomOwn(spark, dir, g, "k", keys)
+      val (kept, total) = SnapshotTable.pruneFiles(spark, dir, g, where)
       assert(kept.nonEmpty && kept.size < total,
         s"generation v$g did not prune (kept ${kept.size} of $total)")
       kept.size
     }
     assert(got.inputFiles.length == perGen.sum,
       "the chain read must open exactly the per-generation survivors")
-    // a tombstone anywhere in the chain defeats per-generation pruning
+    // tombstones are read in full, so an upsert and a delete on top
+    // still answer like the filter while every generation prunes
     val vUp = SnapshotTable.commitUpsert(Seq(5L).toDF("k"), Seq("k"), dir,
-      expectedVersion = tip)
-    intercept[IllegalArgumentException] {
-      SnapshotTable.readWhereInChain(spark, dir, vUp, "k", keys)
+      expectedVersion = tip, bloomCols = Seq("k"))
+    val vDel = SnapshotTable.commitDeletes(Seq(150L).toDF("k"), dir,
+      expectedVersion = vUp)
+    Seq(vUp, vDel).foreach { v =>
+      val pruned = SnapshotTable.readAt(spark, dir, v, where)
+      assert(pruned.as[Long].collect().sorted.toSeq == SnapshotTable
+        .readAt(spark, dir, v).filter($"k".isin(keys: _*))
+        .as[Long].collect().sorted.toSeq)
+      val survivors = SnapshotTable.chainOf(dir, v)
+        .filter(g => SnapshotTable.baseOf(dir, g).isEmpty)
+        .map(g => SnapshotTable.pruneFiles(spark, dir, g, where)._1.size).sum
+      assert(pruned.inputFiles.count(!_.contains("/_deletes/")) == survivors,
+        s"v$v must open exactly the per-generation survivors")
     }
+    assert(SnapshotTable.readAt(spark, dir, vDel, where).as[Long].collect()
+      .sorted.toSeq == Seq(5L, 250L))
+    // an empty generation's sidecars record no file: nothing survives
+    // there, and the rest of the chain still answers
+    val vEmpty = SnapshotTable.commitAppend(spark.range(0).toDF("k"), dir,
+      expectedVersion = vDel, statsCols = Seq("k"), bloomCols = Seq("k"))
+    assert(SnapshotTable.pruneFiles(spark, dir, vEmpty, where) == ((Nil, 0)))
+    assert(SnapshotTable.pruneFiles(spark, dir, vEmpty,
+      Seq(SnapshotTable.RangePredicate("k", 0L, 300L))) == ((Nil, 0)))
+    assert(SnapshotTable.readAt(spark, dir, vEmpty, where).as[Long].collect()
+      .sorted.toSeq == Seq(5L, 250L))
   }
 
   test("readWhereInFrom: large key sets prune via broadcast semi-join") {
@@ -1378,5 +1422,81 @@ class SnapshotTableSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       SnapshotTable.readWhereInFrom(spark, dir, ver, "k", keys, maxKeys = 10)
     }
+  }
+
+  test("property: readAt(v, where) equals readAt(v).filter(where) on random chains") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.rng.Seed
+    import SnapshotTable.{InPredicate, NullPredicate, PrunePredicate, RangePredicate}
+    val rowGen: Gen[(Long, Option[String], Long)] = for {
+      k <- Gen.choose(0L, 40L)
+      s <- Gen.option(Gen.oneOf("a", "b", "c", "d"))
+      v <- Gen.choose(0L, 1000L)
+    } yield (k, s, v)
+    val batchGen = Gen.choose(1, 12).flatMap(Gen.listOfN(_, rowGen))
+    // one op on top of the tip: append, upsert on k, or delete keys
+    val opGen: Gen[(String, List[(Long, Option[String], Long)])] = Gen.oneOf(
+      batchGen.map(("append", _)), batchGen.map(("upsert", _)),
+      Gen.choose(1, 3).flatMap(Gen.listOfN(_, rowGen)).map(("delete", _)))
+    val strGen = Gen.oneOf("a", "b", "c", "d", "e")
+    val termGen: Gen[PrunePredicate] = Gen.oneOf(
+      for (a <- Gen.choose(0L, 45L); b <- Gen.choose(0L, 45L))
+        yield RangePredicate("k", math.min(a, b), math.max(a, b)),
+      for (a <- strGen; b <- strGen)
+        yield RangePredicate("s", Seq(a, b).min, Seq(a, b).max),
+      Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.choose(0L, 45L)))
+        .map(ks => InPredicate("k", ks)),
+      // past InlineInLiteralMax: the residual becomes a semi-join
+      Gen.listOfN(3, Gen.choose(0L, 45L)).map(ks => InPredicate("k",
+        ks ++ (1L to SnapshotTable.InlineInLiteralMax.toLong).map(_ + 1000L))),
+      Gen.choose(1, 3).flatMap(Gen.listOfN(_, strGen))
+        .map(ks => InPredicate("s", ks)),
+      Gen.oneOf("k", "s").flatMap(c =>
+        Gen.oneOf(true, false).map(NullPredicate(c, _))))
+    val caseGen = for {
+      first <- batchGen
+      ops <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, opGen))
+      wheres <- Gen.listOfN(3, Gen.choose(1, 3).flatMap(Gen.listOfN(_, termGen)))
+    } yield (first, ops, wheres)
+    def frame(rows: List[(Long, Option[String], Long)]) =
+      rows.toDF("k", "s", "v").repartitionByRange(2, $"k")
+    val sidecars = Seq("k", "s")
+    val prop = Prop.forAllNoShrink(caseGen) { case (first, ops, wheres) =>
+      val dir = freshDir()
+      try {
+        var tip = SnapshotTable.commit(frame(first), dir,
+          expectedVersion = SnapshotTable.ExpectEmpty,
+          statsCols = sidecars, bloomCols = sidecars)
+        ops.foreach {
+          case ("append", rows) =>
+            tip = SnapshotTable.commitAppend(frame(rows), dir,
+              expectedVersion = tip, statsCols = sidecars, bloomCols = sidecars)
+          case ("upsert", rows) =>
+            tip = SnapshotTable.commitUpsert(frame(rows), Seq("k"), dir,
+              expectedVersion = tip, statsCols = sidecars, bloomCols = sidecars)
+          case (_, rows) =>
+            tip = SnapshotTable.commitDeletes(rows.map(_._1).toDF("k"), dir,
+              expectedVersion = tip)
+        }
+        val rowsOf = (df: org.apache.spark.sql.DataFrame) =>
+          df.select("k", "s", "v").collect().map(_.toString).sorted.toSeq
+        val full = SnapshotTable.readAt(spark, dir, tip)
+        wheres.forall { where =>
+          val want = full.filter(where.map {
+            case RangePredicate(c, lo, hi) => col(c).between(lo, hi)
+            case InPredicate(c, keys) => col(c).isin(keys: _*)
+            case NullPredicate(c, isNull) =>
+              if (isNull) col(c).isNull else col(c).isNotNull
+          }.reduce(_ && _))
+          val got = rowsOf(SnapshotTable.readAt(spark, dir, tip, where))
+          val ok = got == rowsOf(want)
+          if (!ok) println(s"mismatch on v$tip of $dir for $where")
+          ok
+        }
+      } finally SnapshotTable.deleteTree(dir)
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(12).withInitialSeed(Seed(20261017L)), prop)
+    assert(res.passed, res.status.toString)
   }
 }

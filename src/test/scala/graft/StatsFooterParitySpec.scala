@@ -120,8 +120,8 @@ class StatsFooterParitySpec extends SparkSpec {
     assert(krow.getAs[Double]("min_num") == 1.0)
     assert(krow.getAs[Double]("max_num") == 300.0)
     // the _bloomtab written driver-side still answers point lookups
-    val (files, total) =
-      SnapshotTable.pruneFilesBloom(spark, dir, v, "k", Seq(5L))
+    val (files, total) = SnapshotTable.pruneFiles(spark, dir, v,
+      Seq(SnapshotTable.InPredicate("k", Seq(5L))))
     assert(files.nonEmpty && total >= files.size)
   }
 }

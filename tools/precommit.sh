@@ -4,7 +4,7 @@
 # WIP broke HEAD for two rounds). Run this before walking away from the
 # tree; green output = the snapshot commit will compile and pass tests.
 #
-#   tools/precommit.sh         # compile + full test suite
+#   tools/precommit.sh         # compile + full test suite + perfbench unit tests
 #   tools/precommit.sh fast    # compile only (~10s warm)
 #
 # The full driver-shaped gate (Verify + DuckDB selfcheck) stays in
@@ -16,5 +16,6 @@ if [ "$1" = "fast" ]; then
   sbt -batch compile Test/compile
 else
   sbt -batch compile test
+  python3 -m unittest discover -s perfbench/tests
 fi
 echo "precommit: green"
